@@ -1,8 +1,12 @@
 # mirrors the reference's Makefile contract (/root/reference/Makefile:8-11)
-.PHONY: test crosscheck bench format
+.PHONY: test perfbench-test crosscheck bench format
 
 test:
 	python -m pytest tests/ -x -q
+
+# the benchmark's own oracle tests, at tiny sizes
+perfbench-test:
+	python -m pytest perfbench/tests -q
 
 crosscheck:
 	python scripts/crosscheck.py

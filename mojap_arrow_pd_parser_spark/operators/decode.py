@@ -944,14 +944,14 @@ def _row_digest(df: DataFrame, cols: list[str]) -> DataFrame:
     """Order-insensitive multiset digest as a 1-row DataFrame:
     count + sum of per-row hashes.
 
-    Two 64-bit accumulators make a RANDOM collision astronomically
-    unlikely (~2^-128): the second, ``h2 = xxhash64(h1, seed)``, is a
-    nonlinear remix of the first — when two multisets differ but their
-    h1 sums collide by chance, their h2 sums are still independent
-    uniform values. Deriving h2 from h1 instead of re-hashing every
-    column (the round-7 shape) halves the dominant cost — hashing the
-    wide token arrays — without weakening the random-collision bound.
-    One narrow scan, NO shuffle/join.
+    Collision bound: ~2^-64 per row pair, not ~2^-128. The second
+    accumulator, ``h2 = xxhash64(h1, seed)``, is derived from h1, so
+    two rows whose 64-bit h1 collide also collide in h2. What h2 adds
+    is a nonlinear remix of the SUM: two differing multisets whose h1
+    sums cancel by chance (with no per-row collision) still get
+    independent h2 sums. Deriving h2 from h1 instead of re-hashing
+    every column halves the dominant cost, hashing the wide token
+    arrays. One narrow scan, NO shuffle/join.
     """
     by_name = {f.name: f.dataType for f in df.schema.fields}
     canon = [_canonical(F.col(c), by_name[c]) for c in cols]

@@ -1495,12 +1495,6 @@ def _upsert_candidate_pairs(
         (F.col("chunk_id") % GENERATION_STRIDE < zone_off)
         if grid_ok else F.lit(False)
     )
-    gdf = live_idx.filter(is_grid).select(
-        (F.col("chunk_id") % GENERATION_STRIDE).cast("int").alias("_bucket"),
-        F.col("chunk_id").cast("int").alias("old_id"),
-        F.col("new_id").cast("int").alias("new_id"),
-        "file",
-    )
     rdf = live_idx.filter(~is_grid).select(
         F.col("chunk_id").cast("int").alias("old_id"),
         F.col("new_id").cast("int").alias("new_id"),
@@ -1508,10 +1502,6 @@ def _upsert_candidate_pairs(
         F.col("key_min").alias("kmin"),
         F.col("key_max").alias("kmax"),
     )
-    kb = assign_buckets(keys.withColumnRenamed("_k", key), plan).select(
-        F.col(key).alias("_k"), F.col("_bucket")
-    )
-    gpairs = kb.join(F.broadcast(gdf), "_bucket").drop("_bucket")
     # try_cast: empty-string stats (0-row rewrite chunks) must become
     # NULL and drop out — a plain cast raises under ANSI for numeric
     # key types
@@ -1520,6 +1510,18 @@ def _upsert_candidate_pairs(
         & (F.col("_k") <= F.col("kmax").try_cast(key_type))
     )
     rpairs = keys.join(F.broadcast(rdf), cond).drop("kmin", "kmax")
+    if not grid_ok:
+        return rpairs
+    gdf = live_idx.filter(is_grid).select(
+        (F.col("chunk_id") % GENERATION_STRIDE).cast("int").alias("_bucket"),
+        F.col("chunk_id").cast("int").alias("old_id"),
+        F.col("new_id").cast("int").alias("new_id"),
+        "file",
+    )
+    kb = assign_buckets(keys.withColumnRenamed("_k", key), plan).select(
+        F.col(key).alias("_k"), F.col("_bucket")
+    )
+    gpairs = kb.join(F.broadcast(gdf), "_bucket").drop("_bucket")
     return gpairs.unionByName(rpairs)
 
 
@@ -1923,23 +1925,13 @@ def gc_superseded(out_dir: str, spark: SparkSession | None = None) -> int:
         ref = referenced_ids(out_dir) or set()
         victims = [(cid, f) for cid, f in victims if cid not in ref]
     if spark is not None and len(victims) >= _DISTRIBUTED_SCAN_MIN:
-        manifest_dir = fsio.join(out_dir, "manifest")
-        chunks_dir = fsio.join(out_dir, "chunks")
 
         def drop(batches):
             for b in batches:
-                n = 0
-                for row in b.to_pylist():
-                    for path in (
-                        fsio.join(manifest_dir, f"{row['chunk_id']:05d}.json"),
-                        fsio.join(chunks_dir, row["file"]),
-                    ):
-                        try:
-                            fs, p = fsio.resolve(path)
-                            fs.delete_file(p)
-                        except (FileNotFoundError, OSError):
-                            pass  # re-run after a crashed GC
-                    n += 1
+                n = sum(
+                    _delete_victim(out_dir, row["chunk_id"], row["file"])
+                    for row in b.to_pylist()
+                )
                 yield pa.RecordBatch.from_pylist(
                     [{"n": n}], schema=pa.schema([("n", pa.int64())])
                 )
@@ -1955,20 +1947,24 @@ def gc_superseded(out_dir: str, spark: SparkSession | None = None) -> int:
         )
         total = vdf.mapInArrow(drop, schema="n bigint").agg(F.sum("n")).first()[0]
         return int(total or 0)
-    removed = 0
-    for cid, fname in victims:
-        # same missing-file tolerance as the distributed drop task: a
-        # victim whose sidecar lives only in a committed-but-unfolded
-        # _staging dir must not break the idempotent re-run promise
+    return sum(_delete_victim(out_dir, cid, fname) for cid, fname in victims)
+
+
+def _delete_victim(out_dir: str, chunk_id: int, fname: str) -> bool:
+    """Delete a superseded chunk's sidecar and chunk file; True when
+    either was actually removed. Missing files are tolerated: a re-run
+    after a crashed GC, or a victim whose sidecar lives only in a
+    committed-but-unfolded ``_staging`` dir, must not break the
+    idempotent re-run promise — and is not counted again."""
+    removed = False
+    for path in (
+        fsio.join(out_dir, "manifest", f"{int(chunk_id):05d}.json"),
+        fsio.join(out_dir, "chunks", fname),
+    ):
         try:
-            fs, p = fsio.resolve(fsio.join(out_dir, "manifest", f"{cid:05d}.json"))
+            fs, p = fsio.resolve(path)
             fs.delete_file(p)
+            removed = True
         except (FileNotFoundError, OSError):
             pass
-        try:
-            fs2, p2 = fsio.resolve(fsio.join(out_dir, "chunks", fname))
-            fs2.delete_file(p2)
-        except (FileNotFoundError, OSError):
-            pass
-        removed += 1
     return removed

@@ -32,7 +32,9 @@ def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     # spark.read.parquet costs ~100ms of driver round trips, and a
     # 5-table query pays it five times per invocation. The cache lives
     # on the session object so it dies with the session; every
-    # execution still reads the parquet bytes fresh.
+    # execution still reads the parquet bytes fresh. It assumes the
+    # input files never change while the session lives: the memoized
+    # plan keeps the file listing and schema of its first read.
     cache = getattr(spark, "_mojap_table_plans", None)
     if cache is None:
         cache = {}
@@ -47,6 +49,8 @@ def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
 
 #: memoized scan-spread decisions: (sf_dir, name, target) -> bool.
 #: A plan-shape decision derived from the file layout, never a result.
+#: Process-wide: it assumes the input files never change while the
+#: process lives (a rewritten table keeps its first decision).
 _SPREAD_CACHE: dict[tuple, bool] = {}
 
 

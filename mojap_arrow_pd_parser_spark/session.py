@@ -14,6 +14,10 @@ from pyspark.sql import SparkSession
 
 REPO_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
+#: worker daemon module (``REPO_ROOT/mojap_spark_daemon.py``); absent
+#: when the package ships without the repo, e.g. as a --py-files zip
+DAEMON_MODULE = "mojap_spark_daemon"
+
 
 def get_spark(
     app_name: str = "mojap_spark_engine",
@@ -27,6 +31,12 @@ def get_spark(
     * Arrow execution on; maxRecordsPerBatch sized for wide token rows.
     * shuffle partitions ~ cores (not the 200 default).
     * UTC session TZ so oracle (DuckDB) comparisons are stable.
+    * Python workers fork from :mod:`mojap_spark_daemon`
+      (``spark.python.daemon.module``), which stops every task from
+      re-reading the central directories of the zips and jars on the
+      worker's ``sys.path`` (0.17-0.30 s per task). Caveat: a zip or jar
+      on that path rewritten in place during the session is not
+      re-scanned; ``addPyFile`` adds new paths and is unaffected.
     """
     cores = cores or int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
     shuffle_partitions = shuffle_partitions or max(cores, 8)
@@ -65,6 +75,8 @@ def get_spark(
             os.environ["PYTHONPATH"],
         )
     )
+    if os.path.isfile(os.path.join(REPO_ROOT, DAEMON_MODULE + ".py")):
+        b = b.config("spark.python.daemon.module", DAEMON_MODULE)
     for k, v in (extra_conf or {}).items():
         b = b.config(k, v)
     spark = b.getOrCreate()

@@ -1620,6 +1620,30 @@ class TestUpsertRows:
         assert before <= after and len(after) > len(before)
         assert before == {c for c in after if c < 10**6 // 2}
 
+    @pytest.mark.parametrize("mode", ["partition_salt", "file_aligned"])
+    def test_upsert_non_range_plans(self, spark, tmp_path, mode):
+        # plans without a key->bucket grid pair every batch key by the
+        # typed interval join; the insert lands in fresh chunks
+        from mojap_arrow_pd_parser_spark.datagen import tokens_table
+        from mojap_arrow_pd_parser_spark.operators.decode import load_plan, verify_roundtrip
+        from mojap_arrow_pd_parser_spark.operators.encode import (
+            encode_files, encode_table, upsert_rows,
+        )
+        out = str(tmp_path / "enc")
+        src = tokens_table(spark, 400, seed=51)
+        if mode == "partition_salt":
+            encode_table(spark, src, out, n_chunks=4, partition_col="source")
+        else:
+            src_dir = str(tmp_path / "src_parquet")
+            src.repartition(3).write.parquet(src_dir)
+            src = spark.read.parquet(src_dir)
+            encode_files(spark, src_dir, out, key="doc_id")
+        assert load_plan(out)["mode"] == mode
+        batch = self._batch(spark, src)
+        upsert_rows(spark, batch, out, generation=1, gc=True)
+        want = src.join(batch.select("doc_id"), "doc_id", "left_anti").unionAll(batch)
+        assert verify_roundtrip(spark, want, out)["mismatches"] == 0
+
     def test_stream_upsert_multi_epoch(self, spark, tmp_path):
         # CDC feed drained in >1 micro-batch: each key appears once in
         # the feed, so the converged table is order-independent
