@@ -14,8 +14,7 @@ from pyspark.sql import SparkSession
 
 REPO_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
-#: worker daemon module (``REPO_ROOT/mojap_spark_daemon.py``); absent
-#: when the package ships without the repo, e.g. as a --py-files zip
+#: worker daemon module (``REPO_ROOT/mojap_spark_daemon.py``)
 DAEMON_MODULE = "mojap_spark_daemon"
 
 
@@ -74,9 +73,8 @@ def get_spark(
             "spark.executorEnv.PYTHONPATH",
             os.environ["PYTHONPATH"],
         )
+        .config("spark.python.daemon.module", DAEMON_MODULE)
     )
-    if os.path.isfile(os.path.join(REPO_ROOT, DAEMON_MODULE + ".py")):
-        b = b.config("spark.python.daemon.module", DAEMON_MODULE)
     for k, v in (extra_conf or {}).items():
         b = b.config(k, v)
     spark = b.getOrCreate()

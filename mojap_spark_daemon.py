@@ -3,8 +3,8 @@
 Run by Spark as ``python -m mojap_spark_daemon <worker module>`` when
 ``spark.python.daemon.module`` names it (``session.get_spark`` does).
 It is ``pyspark.daemon`` with one change, made before the daemon forks
-its workers: ``importlib.invalidate_caches`` leaves the
-``zipimport.zipimporter`` finders in ``sys.path_importer_cache`` alone.
+its workers: ``zipimport.zipimporter.invalidate_caches`` does nothing, so
+``importlib.invalidate_caches`` no longer re-reads zip archives.
 
 Why: every Python task calls ``importlib.invalidate_caches()``
 (``pyspark.worker_util.setup_spark_files``). On Python 3.10+ that makes
@@ -31,38 +31,24 @@ package would load pyarrow and pandas into the daemon before it forks.
 
 from __future__ import annotations
 
-import importlib
-import os
-import sys
 import zipimport
 
-_stock_invalidate_caches = importlib.invalidate_caches
 
+def keep_zip_directories() -> None:
+    """Make ``zipimporter.invalidate_caches`` a no-op.
 
-def invalidate_caches() -> None:
-    """``importlib.invalidate_caches`` without re-reading zip archives.
-
-    The absolute-path zipimporter entries are taken out of
-    ``sys.path_importer_cache`` for the stock call and put back after.
+    That method is the only part of ``importlib.invalidate_caches`` that
+    re-reads an archive; the stock ``PathFinder.invalidate_caches`` still
+    drops ``None`` and relative-path entries and invalidates every other
+    finder.
     """
-    cache = sys.path_importer_cache
-    kept = {
-        path: finder
-        for path, finder in cache.items()
-        if isinstance(finder, zipimport.zipimporter) and os.path.isabs(path)
-    }
-    for path in kept:
-        del cache[path]
-    try:
-        _stock_invalidate_caches()
-    finally:
-        cache.update(kept)
+    zipimport.zipimporter.invalidate_caches = lambda self: None
 
 
 def main() -> None:
     from pyspark import daemon
 
-    importlib.invalidate_caches = invalidate_caches
+    keep_zip_directories()
     daemon.manager()
 
 

@@ -4,6 +4,7 @@ makes every task re-read the zips and jars on the worker's path."""
 
 from __future__ import annotations
 
+import importlib
 import os
 import subprocess
 import sys
@@ -42,12 +43,18 @@ def test_invalidate_keeps_zips_and_drops_none_entries(tmp_path, monkeypatch):
     monkeypatch.setattr(
         zipimport, "_read_directory", lambda p: reads.append(p) or stock_read(p)
     )
+    # recorded so that monkeypatch undoes the daemon's patch afterwards
+    monkeypatch.setattr(
+        zipimport.zipimporter, "invalidate_caches",
+        zipimport.zipimporter.invalidate_caches,
+    )
     zi = zipimport.zipimporter(archive)
     missing = str(tmp_path / "not_yet")
     monkeypatch.setitem(sys.path_importer_cache, archive, zi)
     monkeypatch.setitem(sys.path_importer_cache, missing, None)
+    mojap_spark_daemon.keep_zip_directories()
     del reads[:]
-    mojap_spark_daemon.invalidate_caches()
+    importlib.invalidate_caches()
     assert reads == []  # the archive's directory was not re-read
     assert sys.path_importer_cache[archive] is zi
     assert missing not in sys.path_importer_cache  # stock: None dropped
@@ -61,6 +68,7 @@ def test_new_directory_on_path_imports_in_task(spark, tmp_path):
 
     def late_import(batches):
         import importlib
+        import zipimport
 
         import pyarrow as pa
 
@@ -80,7 +88,8 @@ def test_new_directory_on_path_imports_in_task(spark, tmp_path):
         for _ in batches:
             pass
         yield pa.RecordBatch.from_pylist([{
-            "shim": importlib.invalidate_caches.__module__ != "importlib",
+            "shim": zipimport.zipimporter.invalidate_caches.__module__
+            != "zipimport",
             "before": before,
             "after": after,
         }])
