@@ -194,11 +194,10 @@ def encode_array(
         lm, lp = encode_int(lens_np)
         w.add("lengths", lm, lp)
         values = arr.flatten()  # excludes null slots' ranges
-        if not _encode_list_clustered(values, lens_np, w, meta):
-            vmeta, vpay = encode_array(
-                values, cascade=None, _outer=False, _parent_cascade=cascade
-            )
-            w.add("child", vmeta, vpay)
+        vmeta, vpay = encode_array(
+            values, cascade=None, _outer=False, _parent_cascade=cascade
+        )
+        w.add("child", vmeta, vpay)
     elif pa.types.is_struct(t):
         # The capability the reference warns-and-skips on nested types
         # (/root/reference/arrow_pd_parser/caster.py:398-402): a struct
@@ -358,133 +357,6 @@ def _bool_values(arr, mask):
     return np.asarray(arr).astype(np.uint8)
 
 
-# ---------------------------------------------------------------------------
-# Row-clustered list encoding (the SURVEY §7 "what's hard (a)" answer to
-# mixed-regime chunks): classify every row of a list<int> column by its
-# internal structure (runs / monotone / narrow / other) with vectorized
-# per-segment stats, permute rows class-contiguous, and give each class
-# section its own auto-selected codec. The permutation is implied by the
-# stored class array (stable sort is deterministic), so the only extra
-# state is 2 bits/row. The row-permutation-for-RLE idea follows
-# "Column Partition and Permutation for Run Length Encoding in
-# Columnar Databases" (SIGMOD 2020), restricted to a stable
-# class-partition so the permutation needs no explicit storage.
-#
-# MEASURED (bench chunk, 3.7M mixed-regime values): clustering matches
-# flat+zstd on ratio (0.641 vs 0.642) at ~25x the CPU — the zstd
-# cascade already extracts run/monotone/narrow redundancy at byte
-# level, and 40% of values are the incompressible adversarial regime.
-# Therefore OFF by default (CLUSTER_ENABLED); kept as an opt-in
-# strategy for cascade-free deployments, where it wins >10%
-# (test_clustered_list_roundtrip_and_ratio).
-# ---------------------------------------------------------------------------
-
-CLUSTER_ENABLED = False
-_CLUSTER_MIN_ROWS = 64
-_CLUSTER_MIN_VALUES = 4096
-_N_CLASSES = 4  # 0=runs 1=monotone 2=narrow 3=other
-
-
-def _classify_rows(values: np.ndarray, lens: np.ndarray) -> np.ndarray:
-    starts = np.zeros(len(lens), dtype=np.int64)
-    np.cumsum(lens[:-1], out=starts[1:])
-    ends = starts + lens
-    n = len(values)
-    with np.errstate(over="ignore"):
-        neq = np.concatenate(([0], (values[1:] != values[:-1]).astype(np.int64)))
-        nondec = np.concatenate(([0], (values[1:] >= values[:-1]).astype(np.int64)))
-    cs_neq = np.concatenate(([0], np.cumsum(neq)))
-    cs_nd = np.concatenate(([0], np.cumsum(nondec)))
-    nonempty = lens > 0
-    e = np.maximum(ends, 1)
-    s1 = np.minimum(starts + 1, n)
-    changes = cs_neq[e] - cs_neq[s1]          # value changes within row
-    mono_cnt = cs_nd[e] - cs_nd[s1]
-    # row min/max via reduceat (empty rows masked out afterwards)
-    r_idx = starts.copy()
-    r_idx[~nonempty] = 0
-    rmin = np.minimum.reduceat(values, r_idx) if n else np.zeros(len(lens), values.dtype)
-    rmax = np.maximum.reduceat(values, r_idx) if n else np.zeros(len(lens), values.dtype)
-    with np.errstate(over="ignore"):
-        spread = rmax.astype(np.int64) - rmin.astype(np.int64)
-    cls = np.full(len(lens), 3, dtype=np.int64)
-    narrow = spread < (1 << 16)
-    cls[narrow] = 2
-    mono = (mono_cnt == np.maximum(lens - 1, 0)) & (lens >= 4)
-    cls[mono] = 1
-    runs = ((changes + 1) * 3 <= lens) & (lens >= 4)
-    cls[runs] = 0
-    cls[~nonempty] = 3
-    return cls
-
-
-def _encode_list_clustered(
-    values_arr: pa.Array, lens: np.ndarray, w: _SectionWriter, meta: dict
-) -> bool:
-    """Try clustered encoding; returns False to use the flat path."""
-    if not CLUSTER_ENABLED:
-        return False
-    t = values_arr.type
-    storage_t, np_dtype = _physical_int_type(t)
-    if storage_t is None or values_arr.null_count:
-        return False
-    if len(lens) < _CLUSTER_MIN_ROWS or len(values_arr) < _CLUSTER_MIN_VALUES:
-        return False
-    values = np.asarray(values_arr.view(storage_t)).astype(np_dtype, copy=False)
-    cls = _classify_rows(values, lens)
-    counts = np.bincount(cls, minlength=_N_CLASSES)
-    if counts.max() >= 0.9 * len(lens):
-        return False  # homogeneous chunk: flat path is as good and cheaper
-    order = np.argsort(cls, kind="stable")
-    starts = np.zeros(len(lens), dtype=np.int64)
-    np.cumsum(lens[:-1], out=starts[1:])
-    src_lens = lens[order]
-    out_off = np.concatenate(([0], np.cumsum(src_lens)))
-    idx = (
-        np.repeat(starts[order] - out_off[:-1], src_lens)
-        + np.arange(len(values), dtype=np.int64)
-    )
-    perm = values[idx]
-    # class boundaries in row space -> value space
-    row_bounds = np.searchsorted(cls[order], np.arange(_N_CLASSES + 1))
-    cmeta, cpay = encode_int(cls.view(np.int64) if cls.dtype != np.int64 else cls)
-    w.add("classes", cmeta, cpay)
-    sec_lens = []
-    for c in range(_N_CLASSES):
-        lo, hi = out_off[row_bounds[c]], out_off[row_bounds[c + 1]]
-        sm, sp = encode_int(perm[lo:hi])
-        w.add(f"sec{c}", sm, sp)
-        sec_lens.append(int(hi - lo))
-    meta["clustered"] = True
-    meta["child_type"] = str(t)
-    return True
-
-
-def _decode_list_clustered(meta: dict, r: _SectionReader, lens: np.ndarray) -> pa.Array:
-    t = _parse_type(meta["child_type"])
-    storage_t, np_dtype = _physical_int_type(t)
-    cmeta, cpay = r.get("classes")
-    cls = decode_int(cmeta, cpay)
-    parts = []
-    for c in range(_N_CLASSES):
-        sm, sp = r.get(f"sec{c}")
-        parts.append(decode_int(sm, sp))
-    perm = np.concatenate(parts) if parts else np.zeros(0, dtype=np_dtype)
-    order = np.argsort(cls, kind="stable")  # same deterministic permutation
-    src_lens = lens[order]
-    out_off = np.concatenate(([0], np.cumsum(src_lens)))
-    rank = np.empty(len(cls), dtype=np.int64)
-    rank[order] = np.arange(len(cls))
-    toff = np.zeros(len(lens), dtype=np.int64)
-    np.cumsum(lens[:-1], out=toff[1:])
-    idx = (
-        np.repeat(out_off[rank] - toff, lens)
-        + np.arange(len(perm), dtype=np.int64)
-    )
-    values = perm[idx]
-    return pa.array(values, type=storage_t).view(t)
-
-
 _STR_NDV_SAMPLE = 4096
 
 
@@ -615,11 +487,8 @@ def decode_array(meta: dict, payload: bytes) -> pa.Array:
     elif kind == "list":
         lm, lp = r.get("lengths")
         lens = decode_int(lm, lp).astype(np.int64)
-        if meta.get("clustered"):
-            values = _decode_list_clustered(meta, r, lens)
-        else:
-            cm, cp_meta = r.get("child")
-            values = decode_array(cm, cp_meta)
+        cm, cp_meta = r.get("child")
+        values = decode_array(cm, cp_meta)
         offsets = np.concatenate(([0], np.cumsum(lens)))
         if pa.types.is_large_list(t):
             arr = pa.LargeListArray.from_arrays(

@@ -24,8 +24,6 @@ case instead of hard-coding either.
 
 from __future__ import annotations
 
-import os
-
 import numpy as np
 
 from .bitpack import bit_width, pack, packed_nbytes, unpack
@@ -416,10 +414,7 @@ _CPU_RANK = {"plain": 0, "ffor": 1, "rle": 2, "dict": 3, "delta": 4, "delta2": 5
 
 #: a pricier codec must beat the cheaper one's estimate by MORE than
 #: this fraction to be chosen (size-vs-encode-CPU hysteresis).
-#: Env-overridable so A/B measurement reaches Spark python workers
-#: (each worker re-reads the env at import; local mode inherits the
-#: driver's environment).
-_NEAR_TIE_MARGIN = float(os.environ.get("SPARK_GRAFT_NEAR_TIE_MARGIN", "0.02"))
+_NEAR_TIE_MARGIN = 0.02
 
 
 def _pick_near_tie(est: dict) -> str:

@@ -20,7 +20,6 @@ from __future__ import annotations
 import json
 import zlib
 
-import pandas as pd
 import pyarrow as pa
 
 from pyspark.sql import DataFrame, SparkSession
@@ -299,23 +298,14 @@ def _live_pruned_files(
     snapshot member whose sidecar is gone (expired out from under the
     reader).
 
-    Above ``_DISTRIBUTED_SCAN_MIN`` sidecars the whole thing runs as
-    ONE Spark job over the sidecar JSON: verification join against a
-    single chunk-dir listing, compaction anti-join (or snapshot
-    membership semi-join for ``as_of``), and the key/col_stats
-    zone-map + bloom filters — the driver materializes ONLY the
-    surviving file names (plus one aggregate row), never the per-chunk
-    ``col_stats``/``key_bloom`` payloads. A 100-TB table (~400k
-    sidecars) ships a few MB of file names through the driver instead
-    of hundreds of MB of sidecar JSON.
+    One driver-side pass at every table size: one
+    :func:`encode.scan_sidecars` (sidecar reads plus one chunk-dir
+    listing for verification), the compaction view or snapshot
+    membership, then the key/col_stats zone-map, null-count and bloom
+    rules on each sidecar dict. ``spark`` is accepted but unused.
     """
     from ..functions import bloom as _bloom
-    from .encode import (
-        _DISTRIBUTED_SCAN_MIN,
-        _sidecar_df,
-        live_chunks,
-        scan_sidecars,
-    )
+    from .encode import live_chunks, scan_sidecars
 
     wheres = _norm_wheres(where)
     key = plan.get("key")
@@ -326,144 +316,72 @@ def _live_pruned_files(
     )
     probes = _key_probe_hashes(plan, in_vals) if in_vals else None
 
-    manifest_dir = fsio.join(out_dir, "manifest")
-    names = [
-        fn for fn, _sz in fsio.list_files(manifest_dir) if fn.endswith(".json")
-    ]
-    if spark is None or len(names) < _DISTRIBUTED_SCAN_MIN:
-        side = scan_sidecars(out_dir)
-        if as_of is not None:
-            from .snapshots import read_snapshot_arrow
-
-            snap_ids = set(
-                read_snapshot_arrow(out_dir, as_of).column("chunk_id").to_pylist()
-            )
-            live = {cid: m for cid, m in side.items() if cid in snap_ids}
-            gone = snap_ids - set(live)
-            if gone:
-                raise IOError(
-                    f"snapshot v{as_of} at {out_dir!r} references chunks "
-                    f"whose sidecars are gone (GC raced an expired "
-                    f"snapshot?): {sorted(gone)[:20]}"
-                )
-        else:
-            live = live_chunks(side)
-        if not live:
-            return None if as_of is None else []
-        bad = [cid for cid, m in live.items() if not m["_verified"]]
-        if bad:
-            raise IOError(
-                f"encoded table at {out_dir!r} is damaged or incomplete: "
-                f"chunk file size mismatch / missing for chunk ids {sorted(bad)}"
-            )
-        keep = list(live.values())
-        # Prune ONLY when the plan explicitly recorded a string key:
-        # manifest key_min/key_max compare lexicographically, which is
-        # wrong for numeric keys ('9' > '100') — those decode all
-        # chunks and rely on the exact row filter after decode.
-        if key_range is not None and plan.get("key_type") == "string":
-            lo, hi = key_range
-            keep = [
-                m for m in keep
-                if not (m["key_max"] < str(lo) or m["key_min"] > str(hi))
-            ]
-        for w in wheres:
-            keep = [m for m in keep if _col_stats_overlap(m, w)]
-        for c in where_null or []:
-            keep = [m for m in keep if _null_count_of(m, c) != 0]
-        for c in where_not_null or []:
-            keep = [
-                m for m in keep
-                if (n := _null_count_of(m, c)) is None
-                or n < int(m.get("n_rows") or 0)
-            ]
-        if in_vals:
-            if len(in_vals) <= _KEY_IN_EXPR_MAX:
-                keep = [
-                    m for m in keep
-                    if any(_col_stats_overlap(m, (key, v, v)) for v in in_vals)
-                ]
-            else:
-                keep = [
-                    m for m in keep
-                    if _col_stats_overlap(m, (key, in_vals[0], in_vals[-1]))
-                ]
-            if probes is not None:
-                h1, h2 = probes
-                keep = [
-                    m for m in keep
-                    if _bloom.maybe_contains_any(
-                        _parse_bloom(m.get("key_bloom")), h1, h2
-                    )
-                ]
-        return [m["file"] for m in keep]
-
-    # _sidecar_df applies the malformed-sidecar skips and falls back
-    # to distributed pyarrow JSON reads when the JVM can't open the
-    # scheme (s3:// without hadoop-aws) — decode keeps its scale shape
-    # on object stores either way
-    sdf = _sidecar_df(spark, out_dir).dropDuplicates(["chunk_id"])
-    n_snap = None
+    side = scan_sidecars(out_dir)
     if as_of is not None:
-        from .snapshots import snapshot_df
+        from .snapshots import read_snapshot_arrow
 
-        snap = snapshot_df(spark, out_dir, as_of).select("chunk_id")
-        n_snap = snap.count()
-        live_df = sdf.join(snap, "chunk_id", "left_semi")
-    else:
-        # live view: drop chunks superseded by a compacted chunk
-        replaced = sdf.select(F.explode("replaces").alias("chunk_id")).distinct()
-        live_df = sdf.join(replaced, "chunk_id", "left_anti")
-    # verification: ONE chunk-dir listing joined in, no per-file stats
-    sizes = fsio.list_files(fsio.join(out_dir, "chunks"))
-    sizes_df = spark.createDataFrame(sizes, "file string, fs_bytes bigint") \
-        if sizes else spark.createDataFrame([], "file string, fs_bytes bigint")
-    keep_expr = _zone_keep_expr(
-        plan, key_range, wheres, key_in=in_vals,
-        where_null=where_null, where_not_null=where_not_null,
-    )
-    if in_vals and probes is not None:
-        keep_expr = keep_expr & _bloom_keep_udf(probes)(F.col("key_bloom"))
-    marked = (
-        live_df.join(F.broadcast(sizes_df), "file", "left")
-        .select(
-            "chunk_id",
-            "file",
-            F.col("fs_bytes").eqNullSafe(F.col("file_bytes")).alias("_ok"),
-            keep_expr.alias("_keep"),
+        snap_ids = set(
+            read_snapshot_arrow(out_dir, as_of).column("chunk_id").to_pylist()
         )
-        .persist()
-    )
-    try:
-        agg = marked.agg(
-            F.count(F.lit(1)).alias("n"),
-            F.sum(F.when(~F.col("_ok"), 1).otherwise(0)).alias("n_bad"),
-            F.slice(
-                F.sort_array(
-                    F.collect_list(F.when(~F.col("_ok"), F.col("chunk_id")))
-                ),
-                1,
-                20,
-            ).alias("bad_ids"),
-        ).collect()[0]
-        if as_of is not None and agg["n"] != n_snap:
+        live = {cid: m for cid, m in side.items() if cid in snap_ids}
+        gone = snap_ids - set(live)
+        if gone:
             raise IOError(
-                f"snapshot v{as_of} at {out_dir!r} references {n_snap} "
-                f"chunks but only {agg['n']} sidecars remain (GC raced "
-                "an expired snapshot?)"
+                f"snapshot v{as_of} at {out_dir!r} references chunks "
+                f"whose sidecars are gone (GC raced an expired "
+                f"snapshot?): {sorted(gone)[:20]}"
             )
-        if agg["n"] == 0:
-            return None if as_of is None else []
-        if agg["n_bad"]:
-            more = "" if agg["n_bad"] <= 20 else f" (+{agg['n_bad'] - 20} more)"
-            raise IOError(
-                f"encoded table at {out_dir!r} is damaged or incomplete: "
-                f"chunk file size mismatch / missing for chunk ids "
-                f"{sorted(agg['bad_ids'])}{more}"
-            )
-        return [r["file"] for r in marked.filter("_keep").select("file").collect()]
-    finally:
-        marked.unpersist()
+    else:
+        live = live_chunks(side)
+    if not live:
+        return None if as_of is None else []
+    bad = [cid for cid, m in live.items() if not m["_verified"]]
+    if bad:
+        raise IOError(
+            f"encoded table at {out_dir!r} is damaged or incomplete: "
+            f"chunk file size mismatch / missing for chunk ids {sorted(bad)}"
+        )
+    keep = list(live.values())
+    # Prune ONLY when the plan explicitly recorded a string key:
+    # manifest key_min/key_max compare lexicographically, which is
+    # wrong for numeric keys ('9' > '100') — those decode all
+    # chunks and rely on the exact row filter after decode.
+    if key_range is not None and plan.get("key_type") == "string":
+        lo, hi = key_range
+        keep = [
+            m for m in keep
+            if not (m["key_max"] < str(lo) or m["key_min"] > str(hi))
+        ]
+    for w in wheres:
+        keep = [m for m in keep if _col_stats_overlap(m, w)]
+    for c in where_null or []:
+        keep = [m for m in keep if _null_count_of(m, c) != 0]
+    for c in where_not_null or []:
+        keep = [
+            m for m in keep
+            if (n := _null_count_of(m, c)) is None
+            or n < int(m.get("n_rows") or 0)
+        ]
+    if in_vals:
+        if len(in_vals) <= _KEY_IN_EXPR_MAX:
+            keep = [
+                m for m in keep
+                if any(_col_stats_overlap(m, (key, v, v)) for v in in_vals)
+            ]
+        else:
+            keep = [
+                m for m in keep
+                if _col_stats_overlap(m, (key, in_vals[0], in_vals[-1]))
+            ]
+        if probes is not None:
+            h1, h2 = probes
+            keep = [
+                m for m in keep
+                if _bloom.maybe_contains_any(
+                    _parse_bloom(m.get("key_bloom")), h1, h2
+                )
+            ]
+    return [m["file"] for m in keep]
 
 
 def _null_count_of(m: dict, col: str) -> int | None:
@@ -492,248 +410,10 @@ def _parse_bloom(raw) -> dict | None:
         return None
 
 
-def _bloom_keep_udf(probes):
-    """Vectorized bloom membership test over the sidecar ``key_bloom``
-    column (metadata rows — one per CHUNK, never per data row; the
-    whole point is to avoid touching data). Missing/malformed filters
-    keep the chunk."""
-    from pyspark.sql.functions import pandas_udf
-
-    h1, h2 = probes
-
-    @pandas_udf("boolean")
-    def _keep(blooms: pd.Series) -> pd.Series:
-        from ..functions.bloom import maybe_contains_any
-
-        return blooms.map(
-            lambda raw: maybe_contains_any(_parse_bloom(raw), h1, h2)
-        )
-
-    return _keep
-
-
-def _dec_exact_bounds(lo, hi):
-    """(lo_lit, hi_lit, cast_type) — Spark decimal literals EXACTLY
-    representing the query bounds, or None when they don't fit a
-    decimal(38,s) (caller falls back to the 2-ULP-widened double
-    compare). Conservativeness proof: the bounds land ON the
-    decimal(38,s) grid, and Spark's string->decimal cast rounds
-    half-up to the NEAREST grid point, so for a stat value m >= lo the
-    rounded r = cast(m) is still >= lo (the nearest grid point to a
-    value at-or-above a grid point is at-or-above it) — hence
-    `r_max < lo` implies the exact `stat_max < lo` even when stats
-    carry more fractional digits than the bounds. Values whose integer
-    part overflows the type try_cast to NULL and keep the chunk.
-
-    The cast scale carries 6 GUARD digits beyond the bounds' scale
-    (capped so integer capacity still covers the bounds): stats with
-    up to 6 more fractional digits than the bounds compare EXACTLY
-    (dist == serial pruning); beyond that the compare degrades
-    gracefully to round-then-compare, which by the proof above can
-    only under-prune, never wrongly prune."""
-    import decimal as _decimal
-
-    try:
-        lo_d, hi_d = _decimal.Decimal(lo), _decimal.Decimal(hi)
-    except (_decimal.InvalidOperation, TypeError, ValueError):
-        return None
-    if not (lo_d.is_finite() and hi_d.is_finite()):
-        return None
-
-    def parts(d):
-        t = d.as_tuple()
-        return max(0, -t.exponent), max(0, len(t.digits) + t.exponent)
-
-    s = max(parts(lo_d)[0], parts(hi_d)[0])
-    p_int = max(parts(lo_d)[1], parts(hi_d)[1], 1)
-    if p_int + s > 38:  # bounds themselves don't fit: double fallback
-        return None
-    s_cast = min(s + 6, 38 - p_int)
-    dt = f"decimal(38,{s_cast})"
-    return F.lit(str(lo_d)).cast(dt), F.lit(str(hi_d)).cast(dt), dt
-
-
-def _dec_widened_bounds(lo, hi) -> tuple[float, float] | None:
-    """[lo, hi] widened to doubles by 2 ULPs each way. The distributed
-    "dec"-tagged prune compares decimal-string stats AS DOUBLES (a
-    decimal(38) can exceed every Spark decimal cast target); the
-    double conversions round by <= 1/2 ULP on each side, so widening
-    the query range by 2 ULPs makes `stat_max_d < lo_w` imply the
-    exact `stat_max < lo` — pruning stays provably conservative. (The
-    serial driver path compares exact decimal.Decimal instead.)"""
-    import math
-
-    try:
-        lo_f, hi_f = float(lo), float(hi)
-    except (OverflowError, ValueError):
-        return None
-    lo_w = math.nextafter(math.nextafter(lo_f, -math.inf), -math.inf)
-    hi_w = math.nextafter(math.nextafter(hi_f, math.inf), math.inf)
-    return lo_w, hi_w
-
-
-#: above this many key_in probe values the per-value zone-map OR
-#: collapses to one [min, max] range check (expression size stays
-#: bounded); the Bloom filter still tests every value individually
+#: above this many key_in probe values the per-value zone-map check
+#: collapses to one [min, max] range check; the Bloom filter still
+#: tests every value individually
 _KEY_IN_EXPR_MAX = 64
-
-
-def _zone_keep_expr(
-    plan: dict,
-    key_range: tuple | None,
-    wheres: list[tuple],
-    key_in: list | None = None,
-    where_null: list[str] | None = None,
-    where_not_null: list[str] | None = None,
-):
-    """Spark-side twin of the driver pruning rules: TRUE iff the chunk
-    may contain matching rows. Conservative by construction — any
-    null/unparseable/incomparable stat keeps the chunk (row filters
-    after decode give exactness; pruning is only an optimization).
-    ``wheres`` is a conjunction; ``key_in`` keeps a chunk when ANY
-    probe value may land in the chunk's typed key zone map;
-    ``where_null``/``where_not_null`` prune on recorded null counts."""
-    keep = F.lit(True)
-    for c in where_null or []:
-        n_nulls = _null_count_expr(c)
-        keep = keep & ~F.coalesce(n_nulls == 0, F.lit(False))
-    for c in where_not_null or []:
-        n_nulls = _null_count_expr(c)
-        keep = keep & ~F.coalesce(
-            n_nulls == F.col("n_rows"), F.lit(False)
-        )
-    if key_range is not None and plan.get("key_type") == "string":
-        lo, hi = key_range
-        disjoint = (F.col("key_max") < str(lo)) | (F.col("key_min") > str(hi))
-        keep = keep & ~F.coalesce(disjoint, F.lit(False))
-    for w in wheres:
-        keep = keep & _where_keep_expr(w)
-    if key_in:
-        key = plan.get("key")
-        vals = sorted(set(key_in))
-        if len(vals) <= _KEY_IN_EXPR_MAX:
-            any_keep = F.lit(False)
-            for v in vals:
-                any_keep = any_keep | _where_keep_expr((key, v, v))
-            keep = keep & any_keep
-        else:
-            keep = keep & _where_keep_expr((key, vals[0], vals[-1]))
-    return keep
-
-
-def _null_count_expr(col: str):
-    """Spark twin of :func:`_null_count_of`: recorded nulls, chunk row
-    count when the column is absent (evolution), NULL when the sidecar
-    predates null accounting (coalesce at the call site keeps)."""
-    raw = F.get_json_object(F.col("col_nulls"), f"$['{col}']").cast("long")
-    return F.when(
-        F.col("col_nulls").isNotNull(), F.coalesce(raw, F.col("n_rows"))
-    )
-
-
-def _where_keep_expr(where: tuple):
-    """Keep-expression for ONE (col, lo, hi) predicate against the
-    ``col_stats`` JSON column: TRUE unless the chunk's typed zone map
-    PROVES disjointness."""
-    import datetime as _dt
-    import decimal as _decimal
-
-    keep = F.lit(True)
-    col, lo, hi = where
-    numeric = (int, float)
-    is_bool = isinstance(lo, bool) or isinstance(hi, bool)
-    raw = F.get_json_object(F.col("col_stats"), f"$['{col}']")
-    arr_s = F.from_json(raw, "array<string>")
-
-    def tagged_disjoint(tag: str, lo_b, hi_b):
-        """Disjointness on a 3-element tagged stat [min, max, tag]."""
-        return (
-            raw.isNotNull()
-            & (F.size(arr_s) == 3)
-            & (arr_s[2] == tag)
-            & ((arr_s[1] < lo_b) | (arr_s[0] > hi_b))
-        )
-
-    def dec_tagged_disjoint(lo_b, hi_b):
-        """Disjointness on "dec"-tagged stats: EXACT decimal
-        compare when the bounds fit decimal(38,s) (matches the
-        serial path's decimal.Decimal compare), else the 2-ULP-
-        widened double compare (conservative for bounds beyond any
-        Spark decimal — e.g. raw floats with ~50-digit exact
-        expansions); None = never prune."""
-        ex = _dec_exact_bounds(lo_b, hi_b)
-        if ex is not None:
-            lo_l, hi_l, dt2 = ex
-            return (
-                raw.isNotNull()
-                & (F.size(arr_s) == 3)
-                & (arr_s[2] == "dec")
-                & ((arr_s[1].try_cast(dt2) < lo_l)
-                   | (arr_s[0].try_cast(dt2) > hi_l))
-            )
-        w = _dec_widened_bounds(lo_b, hi_b)
-        if w is None:
-            return None
-        return (
-            raw.isNotNull()
-            & (F.size(arr_s) == 3)
-            & (arr_s[2] == "dec")
-            & ((arr_s[1].try_cast("double") < F.lit(w[0]))
-               | (arr_s[0].try_cast("double") > F.lit(w[1])))
-        )
-
-    if (not is_bool
-            and isinstance(lo, numeric) and isinstance(hi, numeric)):
-        # Representation chosen by the JSON literal form so the
-        # compare is exact in the regime that matters: float-formed
-        # stats ('.'/'e' present) parse as double (JSON floats
-        # round-trip doubles exactly; a representable stat vs a
-        # round-to-nearest bound can never flip keep->prune), and
-        # integer-formed stats parse as decimal(38,9) (exact for
-        # every int64, where double would round at >2^53).
-        arr_d = F.from_json(raw, "array<double>")
-        arr_c = F.from_json(raw, "array<decimal(38,9)>")
-        lo_c = F.lit(lo).cast("decimal(38,9)")
-        hi_c = F.lit(hi).cast("decimal(38,9)")
-        disjoint = (
-            raw.isNotNull()
-            & ~raw.startswith('["')  # string/tagged stats: below
-            & F.when(
-                raw.rlike("[.eE]"),
-                (arr_d[1] < F.lit(lo)) | (arr_d[0] > F.lit(hi)),
-            ).otherwise((arr_c[1] < lo_c) | (arr_c[0] > hi_c))
-        )
-        keep = keep & ~F.coalesce(disjoint, F.lit(False))
-        dec_disjoint = dec_tagged_disjoint(lo, hi)
-        if dec_disjoint is not None:  # numeric bounds prune dec cols too
-            keep = keep & ~F.coalesce(dec_disjoint, F.lit(False))
-    elif not is_bool and isinstance(lo, _decimal.Decimal) \
-            and isinstance(hi, _decimal.Decimal):
-        dec_disjoint = dec_tagged_disjoint(lo, hi)
-        if dec_disjoint is not None:
-            keep = keep & ~F.coalesce(dec_disjoint, F.lit(False))
-    elif isinstance(lo, _dt.datetime) and isinstance(hi, _dt.datetime):
-        bounds = _where_bound_strs(lo, hi, "ts")
-        if bounds is not None:
-            keep = keep & ~F.coalesce(
-                tagged_disjoint("ts", bounds[0], bounds[1]), F.lit(False)
-            )
-    elif (isinstance(lo, _dt.date) and not isinstance(lo, _dt.datetime)
-            and isinstance(hi, _dt.date) and not isinstance(hi, _dt.datetime)):
-        keep = keep & ~F.coalesce(
-            tagged_disjoint("date", lo.isoformat(), hi.isoformat()),
-            F.lit(False),
-        )
-    elif not is_bool and isinstance(lo, str) and isinstance(hi, str):
-        disjoint = (
-            raw.isNotNull()
-            & raw.startswith('["')  # only genuine string stats...
-            & (F.size(arr_s) == 2)  # ...not tagged dec/ts/date ones
-            & ((arr_s[1] < lo) | (arr_s[0] > hi))
-        )
-        keep = keep & ~F.coalesce(disjoint, F.lit(False))
-    # bool / mixed-type bounds: never prune (same as the driver rule)
-    return keep
 
 
 def _where_bound_strs(lo, hi, tag: str) -> tuple[str, str] | None:
@@ -1030,12 +710,12 @@ def verify_roundtrip(
     return result
 
 
-def encoded_size_report(out_dir: str, spark: SparkSession | None = None) -> dict:
+def encoded_size_report(out_dir: str) -> dict:
     """Total on-disk encoded bytes (LIVE chunk files) for the
     <=parquet bound; falls back to a directory sum without sidecars."""
     from .encode import live_chunks, scan_done_chunks
 
-    live = live_chunks(scan_done_chunks(out_dir, spark, columns=()))
+    live = live_chunks(scan_done_chunks(out_dir, columns=()))
     if live:
         return {"encoded_bytes": sum(m["file_bytes"] for m in live.values())}
     total = sum(
@@ -1046,12 +726,7 @@ def encoded_size_report(out_dir: str, spark: SparkSession | None = None) -> dict
     return {"encoded_bytes": total}
 
 
-#: fixed-width ISO render of "ts"-tagged stats (encode._TS_STAT_FMT)
-#: as a Spark datetime pattern, for the distributed stat parse
-_TS_SPARK_FMT = "yyyy-MM-dd'T'HH:mm:ss.SSSSSS"
-
-
-def _stat_parse_serial(mm: list, dt) -> tuple | None:
+def _stat_parse(mm: list, dt) -> tuple | None:
     """One chunk's recorded [min, max] (col_stats entry ``mm``) parsed
     into the COLUMN's python domain per the table schema type ``dt``,
     or None when the stat form and the schema type don't match (foreign
@@ -1094,57 +769,6 @@ def _stat_parse_serial(mm: list, dt) -> tuple | None:
     return None
 
 
-def _stat_min_max_exprs(col: str, dt):
-    """(min_expr, max_expr) parsing the recorded stat strings into the
-    column's own Spark type (exact: int64 via decimal(38,0), decimals
-    via the column's decimal type, timestamps via the fixed-width ISO
-    pattern whose lexicographic order is chronological), or None for
-    types that never record stats."""
-    from pyspark.sql import types as T
-
-    raw = F.get_json_object(F.col("col_stats"), f"$['{col}']")
-    arr_s = F.from_json(raw, "array<string>")
-    tagged = raw.isNotNull() & (F.size(arr_s) == 3)
-    plain = raw.isNotNull() & (F.size(arr_s) == 2)
-    if isinstance(dt, (T.ByteType, T.ShortType, T.IntegerType, T.LongType)):
-        arr = F.from_json(raw, "array<decimal(38,0)>")
-        return (
-            F.when(plain & ~raw.startswith('["'), arr[0]),
-            F.when(plain & ~raw.startswith('["'), arr[1]),
-        )
-    if isinstance(dt, (T.FloatType, T.DoubleType)):
-        arr = F.from_json(raw, "array<double>")
-        return (
-            F.when(plain & ~raw.startswith('["'), arr[0]),
-            F.when(plain & ~raw.startswith('["'), arr[1]),
-        )
-    if isinstance(dt, T.StringType):
-        return (
-            F.when(plain & raw.startswith('["'), arr_s[0]),
-            F.when(plain & raw.startswith('["'), arr_s[1]),
-        )
-    if isinstance(dt, T.DecimalType):
-        t = dt.simpleString()
-        cond = tagged & (arr_s[2] == "dec")
-        return (
-            F.when(cond, arr_s[0].try_cast(t)),
-            F.when(cond, arr_s[1].try_cast(t)),
-        )
-    if isinstance(dt, T.TimestampType):
-        cond = tagged & (arr_s[2] == "ts")
-        return (
-            F.when(cond, F.to_timestamp(arr_s[0], _TS_SPARK_FMT)),
-            F.when(cond, F.to_timestamp(arr_s[1], _TS_SPARK_FMT)),
-        )
-    if isinstance(dt, T.DateType):
-        cond = tagged & (arr_s[2] == "date")
-        return (
-            F.when(cond, arr_s[0].try_cast("date")),
-            F.when(cond, arr_s[1].try_cast("date")),
-        )
-    return None
-
-
 def table_stats(
     spark: SparkSession | None,
     out_dir: str,
@@ -1167,16 +791,11 @@ def table_stats(
 
     Damage policy matches decode: any live sidecar whose chunk file is
     missing/size-mismatched raises (stats must never describe a table
-    that can't be read back). Distributed above the same sidecar
-    threshold as every other scan; only ONE aggregate row ever reaches
-    the driver there.
+    that can't be read back). The fold runs on the driver over one
+    :func:`encode.scan_sidecars`, the same scan every read uses;
+    ``spark`` is accepted but unused (None is fine).
     """
-    from .encode import (
-        _DISTRIBUTED_SCAN_MIN,
-        _sidecar_df,
-        live_chunks,
-        scan_sidecars,
-    )
+    from .encode import live_chunks, scan_sidecars
 
     plan = load_plan(out_dir)
     schema = StructType.fromJson(json.loads(plan["schema_json"]))
@@ -1186,141 +805,53 @@ def table_stats(
     if unknown:
         raise KeyError(f"columns not in the table schema: {unknown}")
 
-    manifest_dir = fsio.join(out_dir, "manifest")
-    n_side = sum(
-        1 for fn, _sz in fsio.list_files(manifest_dir) if fn.endswith(".json")
-    )
-    if spark is None or n_side < _DISTRIBUTED_SCAN_MIN:
-        live = live_chunks(scan_sidecars(out_dir))
-        bad = [cid for cid, m in live.items() if not m["_verified"]]
-        if bad:
-            raise IOError(
-                f"encoded table at {out_dir!r} is damaged or incomplete: "
-                f"chunk file size mismatch / missing for chunk ids {sorted(bad)}"
-            )
-        out_cols: dict[str, dict] = {}
-        for c in cols:
-            mn = mx = None
-            missing = 0
-            nulls = 0
-            nulls_missing = 0
-            for m in live.values():
-                raw_n = m.get("col_nulls")
-                if raw_n is None:
-                    nulls_missing += 1  # pre-round-7 sidecar
-                else:
-                    try:
-                        d = json.loads(raw_n)
-                        # a column absent from the chunk (added later
-                        # by schema evolution) reads back all-null
-                        nulls += int(d.get(c, m.get("n_rows") or 0))
-                    except (TypeError, ValueError, json.JSONDecodeError):
-                        nulls_missing += 1
-                if not m.get("n_rows"):
-                    continue  # empty chunks constrain nothing
-                try:
-                    stats = json.loads(m.get("col_stats") or "{}")
-                except (TypeError, json.JSONDecodeError):
-                    stats = {}
-                parsed = (
-                    _stat_parse_serial(stats[c], by_name[c])
-                    if c in stats else None
-                )
-                if parsed is None:
-                    missing += 1
-                    continue
-                lo, hi = parsed
-                mn = lo if mn is None or lo < mn else mn
-                mx = hi if mx is None or hi > mx else mx
-            out_cols[c] = {
-                "min": mn, "max": mx, "exact": missing == 0,
-                "nulls": nulls, "nulls_exact": nulls_missing == 0,
-            }
-        return {
-            "n_rows": sum(int(m.get("n_rows") or 0) for m in live.values()),
-            "n_chunks": len(live),
-            "columns": out_cols,
-        }
-
-    sdf = _sidecar_df(spark, out_dir).dropDuplicates(["chunk_id"])
-    replaced = sdf.select(F.explode("replaces").alias("chunk_id")).distinct()
-    live_df = sdf.join(replaced, "chunk_id", "left_anti")
-    sizes = fsio.list_files(fsio.join(out_dir, "chunks"))
-    sizes_df = spark.createDataFrame(sizes, "file string, fs_bytes bigint") \
-        if sizes else spark.createDataFrame([], "file string, fs_bytes bigint")
-    live_df = live_df.join(F.broadcast(sizes_df), "file", "left").withColumn(
-        "_ok", F.col("fs_bytes").eqNullSafe(F.col("file_bytes"))
-    )
-    aggs = [
-        F.count(F.lit(1)).alias("_chunks"),
-        F.sum(F.when(~F.col("_ok"), 1).otherwise(0)).alias("_bad"),
-        F.sum("n_rows").alias("_rows"),
-    ]
-    exprs: dict[str, tuple] = {}
-    for c in cols:
-        e = _stat_min_max_exprs(c, by_name[c])
-        exprs[c] = e
-        nonempty = F.col("n_rows") > 0
-        # null accounting: recorded count, or the chunk's full row
-        # count when the column is absent from the chunk (schema
-        # evolution); sidecars without col_nulls mark the sum inexact
-        raw_nulls = F.get_json_object(
-            F.col("col_nulls"), f"$['{c}']"
-        ).cast("long")
-        aggs.append(
-            F.sum(
-                F.when(
-                    F.col("col_nulls").isNotNull(),
-                    F.coalesce(raw_nulls, F.col("n_rows")),
-                ).otherwise(0)
-            ).alias(f"_nulls_{c}")
-        )
-        aggs.append(
-            F.sum(
-                F.when(F.col("col_nulls").isNull(), 1).otherwise(0)
-            ).alias(f"_nmiss_{c}")
-        )
-        if e is None:
-            aggs.append(
-                F.sum(F.when(nonempty, 1).otherwise(0)).alias(f"_miss_{c}")
-            )
-            continue
-        lo_e, hi_e = e
-        aggs.append(F.min(F.when(nonempty, lo_e)).alias(f"_min_{c}"))
-        aggs.append(F.max(F.when(nonempty, hi_e)).alias(f"_max_{c}"))
-        aggs.append(
-            F.sum(
-                F.when(nonempty & lo_e.isNull(), 1).otherwise(0)
-            ).alias(f"_miss_{c}")
-        )
-    row = live_df.agg(*aggs).collect()[0]
-    if row["_bad"]:
+    live = live_chunks(scan_sidecars(out_dir))
+    bad = [cid for cid, m in live.items() if not m["_verified"]]
+    if bad:
         raise IOError(
             f"encoded table at {out_dir!r} is damaged or incomplete: "
-            f"{row['_bad']} live chunk files missing/size-mismatched"
+            f"chunk file size mismatch / missing for chunk ids {sorted(bad)}"
         )
-    from pyspark.sql import types as T
-
-    out_cols = {}
+    out_cols: dict[str, dict] = {}
     for c in cols:
-        exact = (row[f"_miss_{c}"] or 0) == 0
-        nulls = {
-            "nulls": int(row[f"_nulls_{c}"] or 0),
-            "nulls_exact": (row[f"_nmiss_{c}"] or 0) == 0,
+        mn = mx = None
+        missing = 0
+        nulls = 0
+        nulls_missing = 0
+        for m in live.values():
+            raw_n = m.get("col_nulls")
+            if raw_n is None:
+                nulls_missing += 1  # pre-round-7 sidecar
+            else:
+                try:
+                    d = json.loads(raw_n)
+                    # a column absent from the chunk (added later
+                    # by schema evolution) reads back all-null
+                    nulls += int(d.get(c, m.get("n_rows") or 0))
+                except (TypeError, ValueError, json.JSONDecodeError):
+                    nulls_missing += 1
+            if not m.get("n_rows"):
+                continue  # empty chunks constrain nothing
+            try:
+                stats = json.loads(m.get("col_stats") or "{}")
+            except (TypeError, json.JSONDecodeError):
+                stats = {}
+            parsed = (
+                _stat_parse(stats[c], by_name[c])
+                if c in stats else None
+            )
+            if parsed is None:
+                missing += 1
+                continue
+            lo, hi = parsed
+            mn = lo if mn is None or lo < mn else mn
+            mx = hi if mx is None or hi > mx else mx
+        out_cols[c] = {
+            "min": mn, "max": mx, "exact": missing == 0,
+            "nulls": nulls, "nulls_exact": nulls_missing == 0,
         }
-        if exprs[c] is None:
-            out_cols[c] = {"min": None, "max": None, "exact": exact, **nulls}
-            continue
-        mn, mx = row[f"_min_{c}"], row[f"_max_{c}"]
-        if isinstance(
-            by_name[c], (T.ByteType, T.ShortType, T.IntegerType, T.LongType)
-        ):
-            # decimal(38,0) parse -> the column's python int domain
-            mn = int(mn) if mn is not None else None
-            mx = int(mx) if mx is not None else None
-        out_cols[c] = {"min": mn, "max": mx, "exact": exact, **nulls}
     return {
-        "n_rows": int(row["_rows"] or 0),
-        "n_chunks": int(row["_chunks"] or 0),
+        "n_rows": sum(int(m.get("n_rows") or 0) for m in live.values()),
+        "n_chunks": len(live),
         "columns": out_cols,
     }

@@ -333,7 +333,6 @@ def _fold_committed_staging(out_dir: str) -> None:
 
 def scan_done_chunks(
     out_dir: str,
-    spark: SparkSession | None = None,
     columns: tuple[str, ...] | None = None,
     pending_ok: str | None = None,
 ) -> dict[int, dict]:
@@ -347,30 +346,15 @@ def scan_done_chunks(
     still count as done — their rows live on in the merged chunk).
 
     ``columns`` projects the per-sidecar dict (see
-    :func:`scan_sidecars`) — the resume/compact/GC paths pass the few
-    fields they need so a 400k-chunk table never ships per-chunk
-    ``col_stats`` JSON through the driver.
+    :func:`scan_sidecars`): the resume/compact/GC paths pass the few
+    fields they need, so the dict they hold carries no per-chunk
+    ``col_stats`` JSON.
     """
     return {
         cid: {k: v for k, v in m.items() if k != "_verified"}
-        for cid, m in scan_sidecars(out_dir, spark, columns, pending_ok).items()
+        for cid, m in scan_sidecars(out_dir, columns, pending_ok).items()
         if m["_verified"]
     }
-
-
-#: one row per sidecar JSON (schema fixed -> no inference pass)
-SIDECAR_DF_SCHEMA = (
-    "chunk_id int, n_rows bigint, n_cols int, in_bytes bigint, "
-    "out_bytes bigint, codecs string, crc32 string, key_min string, "
-    "key_max string, wall_ms bigint, file string, status string, "
-    "file_bytes bigint, replaces array<bigint>, col_stats string, "
-    "key_bloom string, col_nulls string"
-)
-
-#: below this many sidecars the serial loop wins (no job overhead);
-#: above it, O(chunks) driver round trips would dominate — a 100-TB
-#: table at 256 MB chunks has ~400k sidecars
-_DISTRIBUTED_SCAN_MIN = 256
 
 
 #: fields every scan materializes regardless of ``columns``:
@@ -382,7 +366,6 @@ _SIDECAR_CORE_FIELDS = ("chunk_id", "file", "file_bytes", "replaces")
 
 def scan_sidecars(
     out_dir: str,
-    spark: SparkSession | None = None,
     columns: tuple[str, ...] | None = None,
     pending_ok: str | None = None,
 ) -> dict[int, dict]:
@@ -390,20 +373,20 @@ def scan_sidecars(
     present at the recorded size). Readers use this to tell a DAMAGED
     table (sidecar present, file wrong) from an absent one.
 
-    With a ``spark`` handle and enough sidecars, the scan is
-    DISTRIBUTED (the Iceberg manifest-list move): one
-    ``spark.read.json`` over the sidecar directory replaces O(chunks)
-    serial driver round trips, and file verification uses ONE paged
-    directory listing of ``chunks/`` instead of O(chunks) stat calls.
-    When the JVM has no FileSystem for the scheme (s3:// without
-    hadoop-aws), the JSON read runs as distributed pyarrow I/O
-    instead (:func:`_sidecar_df`) — same dataflow shape.
+    Every manifest view (reads, stats, snapshots and every verb) is
+    built from this one driver-side scan, at every table size: one
+    listing per sidecar directory, one read per sidecar, and ONE
+    listing of ``chunks/`` whose sizes verify every sidecar's
+    ``file_bytes`` (no per-chunk stat; a missing file lists as None,
+    which never equals a recorded size). On an object store each
+    sidecar read is one GET, so the scan costs O(chunks) requests.
 
-    ``columns=None`` returns every sidecar field (back-compat);
-    passing a tuple keeps only those fields plus the core
-    verification/lineage fields — the DataFrame is projected BEFORE
-    the collect, so unrequested payloads (``col_stats`` above all)
-    never reach the driver.
+    Malformed sidecars (a partial write from a killed run, or one
+    without ``file``/``file_bytes``) are skipped, so their buckets
+    re-encode on resume.
+
+    ``columns=None`` returns every sidecar field; passing a tuple
+    keeps only those fields plus the core verification/lineage fields.
 
     ``pending_ok`` additionally exposes that transaction token's
     STAGED sidecars (``_staging/<token>/``); committed tokens'
@@ -411,148 +394,29 @@ def scan_sidecars(
     """
     dirs = [fsio.join(out_dir, "manifest")]
     dirs += _visible_staging_dirs(out_dir, pending_ok)
-    entries = [
-        (d, fn)
-        for d in dirs
-        for fn, _sz in fsio.list_files(d)
-        if fn.endswith(".json")
-    ]
-    if spark is not None and len(entries) >= _DISTRIBUTED_SCAN_MIN:
-        return _scan_sidecars_distributed(spark, out_dir, columns, pending_ok)
+    sidecars = []
+    for d in dirs:
+        for fn, _sz in fsio.list_files(d):
+            if not fn.endswith(".json"):
+                continue
+            try:
+                sidecars.append(fsio.read_json(fsio.join(d, fn)))
+            except (json.JSONDecodeError, OSError):
+                continue  # partial sidecar from a killed run -> re-encode
+    # listed AFTER the sidecars are read: a chunk file is durable
+    # before its sidecar exists, so every sidecar read above has its
+    # file in this listing
+    sizes = dict(fsio.list_files(fsio.join(out_dir, "chunks")))
     keep = None if columns is None else set(_SIDECAR_CORE_FIELDS) | set(columns)
     out: dict[int, dict] = {}
-    for d, fn in entries:
+    for m in sidecars:
         try:
-            m = fsio.read_json(fsio.join(d, fn))
-            m["_verified"] = (
-                fsio.file_size(fsio.join(out_dir, "chunks", m["file"]))
-                == m["file_bytes"]
-            )
+            m["_verified"] = sizes.get(m["file"]) == m["file_bytes"]
             if keep is not None:
                 m = {k: v for k, v in m.items() if k in keep or k == "_verified"}
             out[int(m["chunk_id"])] = m
-        except (json.JSONDecodeError, KeyError, OSError):
-            continue  # partial sidecar from a killed run -> re-encode
-    return out
-
-
-def _sidecar_df(
-    spark: SparkSession, out_dir: str, pending_ok: str | None = None
-) -> DataFrame:
-    """Sidecar rows as one DataFrame (SIDECAR_DF_SCHEMA), malformed
-    rows filtered: ``spark.read.json`` when the JVM can reach the
-    scheme, else a mapInArrow fan-out whose tasks read the JSONs via
-    ``pyarrow.fs`` (fsio) — the executor-side path that already
-    handles s3:// credentials for chunk files. The file_bytes
-    null-filter matters on both paths: a sidecar without a recorded
-    size is malformed (the serial loop's KeyError skip) and must not
-    verify a MISSING chunk file via None == None. Committed (and
-    ``pending_ok``) staging dirs are read alongside ``manifest/``;
-    consumers dedupe on chunk_id (a mid-migration sidecar may appear
-    in both, with identical content)."""
-    manifest_dir = fsio.join(out_dir, "manifest")
-    dirs = [manifest_dir] + _visible_staging_dirs(out_dir, pending_ok)
-    if jvm_handles_scheme(spark, manifest_dir):
-        sdf = spark.read.schema(SIDECAR_DF_SCHEMA).json(dirs)
-    else:
-        paths = [
-            fsio.join(d, fn)
-            for d in dirs
-            for fn, _sz in fsio.list_files(d)
-            if fn.endswith(".json")
-        ]
-        sdf = _read_sidecars_arrow(spark, paths)
-    return sdf.filter(
-        F.col("chunk_id").isNotNull()
-        & F.col("file").isNotNull()
-        & F.col("file_bytes").isNotNull()
-    )
-
-
-#: arrow twin of SIDECAR_DF_SCHEMA (mapInArrow yields these batches)
-_SIDECAR_ARROW_SCHEMA = pa.schema(
-    [
-        ("chunk_id", pa.int32()),
-        ("n_rows", pa.int64()),
-        ("n_cols", pa.int32()),
-        ("in_bytes", pa.int64()),
-        ("out_bytes", pa.int64()),
-        ("codecs", pa.string()),
-        ("crc32", pa.string()),
-        ("key_min", pa.string()),
-        ("key_max", pa.string()),
-        ("wall_ms", pa.int64()),
-        ("file", pa.string()),
-        ("status", pa.string()),
-        ("file_bytes", pa.int64()),
-        ("replaces", pa.list_(pa.int64())),
-        ("col_stats", pa.string()),
-        ("key_bloom", pa.string()),
-        ("col_nulls", pa.string()),
-    ]
-)
-
-
-def _read_sidecars_arrow(spark: SparkSession, paths: list[str]) -> DataFrame:
-    """Distributed sidecar JSON read for schemes the JVM can't open:
-    the driver ships only file names; each task reads its sidecars
-    through fsio/pyarrow.fs. A partial sidecar from a killed run is
-    skipped (the PERMISSIVE-mode null-row drop, one file earlier)."""
-    field_names = _SIDECAR_ARROW_SCHEMA.names
-
-    def read_files(batches):
-        for b in batches:
-            rows = []
-            for path in b.column("path").to_pylist():
-                try:
-                    m = fsio.read_json(path)
-                except (json.JSONDecodeError, OSError):
-                    continue
-                if not isinstance(m, dict):
-                    continue
-                rows.append({k: m.get(k) for k in field_names})
-            if rows:
-                yield from pa.Table.from_pylist(
-                    rows, schema=_SIDECAR_ARROW_SCHEMA
-                ).to_batches()
-
-    fdf = spark.createDataFrame([(p,) for p in paths], "path string")
-    fdf = fdf.repartition(
-        max(1, min(len(paths) // 64 + 1, spark.sparkContext.defaultParallelism))
-    )
-    return fdf.mapInArrow(read_files, schema=SIDECAR_DF_SCHEMA)
-
-
-def _scan_sidecars_distributed(
-    spark: SparkSession,
-    out_dir: str,
-    columns: tuple[str, ...] | None = None,
-    pending_ok: str | None = None,
-) -> dict[int, dict]:
-    """Sidecar scan as one distributed JSON read + one chunk-dir
-    listing. ``columns`` (see :func:`scan_sidecars`) is applied as a
-    DataFrame projection BEFORE the collect."""
-    sdf = _sidecar_df(spark, out_dir, pending_ok)
-    if columns is not None:
-        proj = [
-            f for f in sdf.columns
-            if f in _SIDECAR_CORE_FIELDS or f in columns
-        ]
-        sdf = sdf.select(*proj)
-    sizes = dict(fsio.list_files(fsio.join(out_dir, "chunks")))
-    out: dict[int, dict] = {}
-    for row in sdf.collect():
-        m = row.asDict()
-        if m.get("replaces") is None:
-            m.pop("replaces", None)  # serial dicts omit the key entirely
-        else:
-            m["replaces"] = [int(r) for r in m["replaces"]]
-        if m.get("col_stats") is None:
-            m.pop("col_stats", None)  # pre-round-3 sidecars lack it
-            m.pop("key_bloom", None)
-            m.pop("col_nulls", None)
-        m["_verified"] = sizes.get(m["file"]) == m["file_bytes"]
-        out[int(m["chunk_id"])] = m
+        except KeyError:
+            continue  # malformed sidecar: no file / file_bytes / chunk_id
     return out
 
 
@@ -701,14 +565,9 @@ def encode_table(
             "_bucket", (F.col("_bucket") + F.lit(int(chunk_base))).cast("int")
         )
     if resume:
-        # resume needs only the done ids INSIDE this generation's
-        # range (appended generations never mistake each other's
-        # buckets for done work): large tables answer with a filtered
-        # distinct collect — O(n_buckets) driver rows, not the chunk
-        # dict
+        # resume skips only the done ids INSIDE this generation's range
         done = _done_ids_in_range(
-            spark, out_dir, chunk_base, chunk_base + n_buckets,
-            pending_ok=pending,
+            out_dir, chunk_base, chunk_base + n_buckets, pending_ok=pending,
         )
         if done:
             bdf = bdf.filter(~F.col("_bucket").isin(done))
@@ -890,117 +749,16 @@ _MANIFEST_FIELDS = (
 )
 
 
-#: column names of MANIFEST_SCHEMA, in schema order
-_MANIFEST_COLS = [p.strip().split()[0] for p in MANIFEST_SCHEMA.split(",")]
-
-
-def _verified_sidecar_df(
-    spark, out_dir, columns: tuple | None = None, pending_ok: str | None = None
-) -> DataFrame:
-    """VERIFIED sidecar rows as a DataFrame (dedup by chunk_id) —
-    the distributed twin of ``scan_done_chunks``: one distributed
-    sidecar read (:func:`_sidecar_df`), verification by a semi-join
-    against one paged chunk-dir listing (names+sizes only). ``columns``
-    projects like :func:`scan_sidecars` (core fields always kept)."""
-    sdf = _sidecar_df(spark, out_dir, pending_ok).dropDuplicates(["chunk_id"])
-    if columns is not None:
-        proj = [
-            f for f in sdf.columns
-            if f in _SIDECAR_CORE_FIELDS or f in columns
-        ]
-        sdf = sdf.select(*proj)
-    sizes = spark.createDataFrame(
-        [(fn, int(sz))
-         for fn, sz in fsio.list_files(fsio.join(out_dir, "chunks"))]
-        or [("", -1)],
-        "_file string, _sz bigint",
-    )
-    return sdf.join(
-        F.broadcast(sizes),
-        (sdf["file"] == sizes["_file"]) & (sdf["file_bytes"] == sizes["_sz"]),
-        "left_semi",
-    )
-
-
-def _live_df(ver: DataFrame) -> DataFrame:
-    """Live view of a verified-sidecar DataFrame: drop every chunk a
-    verified compacted chunk superseded (the DataFrame twin of
-    :func:`live_chunks`)."""
-    replaced = ver.select(F.explode("replaces").alias("_rid")).distinct()
-    return ver.join(replaced, ver["chunk_id"] == replaced["_rid"], "left_anti")
-
-
-def _use_distributed_scan(spark, out_dir, pending_ok: str | None = None) -> bool:
-    """True when the verb paths should answer their manifest questions
-    through DataFrame aggregates/filtered collects instead of the
-    serial O(chunks) driver dict — same gate as :func:`scan_sidecars`."""
-    if spark is None:
-        return False
-    dirs = [fsio.join(out_dir, "manifest")]
-    dirs += _visible_staging_dirs(out_dir, pending_ok)
-    n = sum(
-        1 for d in dirs for fn, _sz in fsio.list_files(d)
-        if fn.endswith(".json")
-    )
-    return n >= _DISTRIBUTED_SCAN_MIN
-
-
-def _next_rewrite_id_df(ver: DataFrame) -> int:
-    """:func:`_next_rewrite_id` from a verified-sidecar DataFrame —
-    two scalar aggregates reach the driver, never the id set."""
-    gmax = ver.agg(F.max(F.col("chunk_id").cast("long"))).first()[0]
-    if gmax is None:
-        raise ValueError("empty table has no rewrite zone")
-    top = (int(gmax) // GENERATION_STRIDE) * GENERATION_STRIDE
-    zone = top + GENERATION_STRIDE // 2
-    zmax = (
-        ver.filter(F.col("chunk_id").cast("long") >= zone)
-        .agg(F.max(F.col("chunk_id").cast("long")))
-        .first()[0]
-    )
-    nxt = (int(zmax) + 1) if zmax is not None else zone
-    if nxt >= top + GENERATION_STRIDE:
-        raise RuntimeError(
-            f"rewrite-id zone [{zone}, {top + GENERATION_STRIDE}) is "
-            "exhausted; append a new generation (encode_append) to "
-            "open a fresh rewrite zone before further compaction/"
-            "delete/upsert rewrites"
-        )
-    return nxt
-
-
 def _done_ids_in_range(
-    spark, out_dir, lo: int, hi: int, pending_ok: str | None = None
+    out_dir, lo: int, hi: int, pending_ok: str | None = None
 ) -> list[int]:
     """Resume view restricted to [lo, hi): the bucket ids a rerun may
-    skip. Large tables answer with ONE filtered distinct collect —
-    O(generation buckets) driver rows, never the whole chunk dict."""
-    if not _use_distributed_scan(spark, out_dir, pending_ok):
-        return sorted(
-            cid
-            for cid in done_chunk_ids(
-                scan_done_chunks(out_dir, spark, columns=(), pending_ok=pending_ok)
-            )
-            if lo <= cid < hi
-        )
-    ver = _verified_sidecar_df(spark, out_dir, columns=(), pending_ok=pending_ok)
-    ids = ver.select(F.col("chunk_id").cast("long").alias("id")).unionAll(
-        ver.select(F.explode("replaces").alias("id"))
+    skip (appended generations never mistake each other's buckets for
+    done work)."""
+    done = done_chunk_ids(
+        scan_done_chunks(out_dir, columns=(), pending_ok=pending_ok)
     )
-    rows = (
-        ids.filter((F.col("id") >= lo) & (F.col("id") < hi))
-        .distinct()
-        .collect()
-    )
-    return sorted(int(r["id"]) for r in rows)
-
-
-def _live_manifest_df(spark, out_dir) -> DataFrame:
-    """The LIVE verified manifest as a DataFrame, assembled WITHOUT any
-    per-chunk row touching the driver (verdict r6 #4). Projected to the
-    MANIFEST_SCHEMA columns, so col_stats JSON never leaves the
-    executors."""
-    return _live_df(_verified_sidecar_df(spark, out_dir)).select(*_MANIFEST_COLS)
+    return sorted(cid for cid in done if lo <= cid < hi)
 
 
 def _finish_encode(spark, mdf, out_dir, consolidate, verb: str = "commit"):
@@ -1023,32 +781,12 @@ def _finish_encode(spark, mdf, out_dir, consolidate, verb: str = "commit"):
         write_snapshot(spark, out_dir, verb)
     # Consolidate ALL LIVE verified sidecars (this run + survivors of
     # killed runs, minus compaction-superseded chunks) into one
-    # queryable manifest table.
-    manifest_dir = fsio.join(out_dir, "manifest")
-    n_sidecars = sum(
-        1 for fn, _sz in fsio.list_files(manifest_dir) if fn.endswith(".json")
-    )
-    if n_sidecars >= _DISTRIBUTED_SCAN_MIN and jvm_handles_scheme(spark, out_dir):
-        # 100-TB path: the consolidated manifest is rebuilt and written
-        # entirely inside the DataFrame — O(chunks) rows never
-        # materialize on the driver (at ~10^6 chunks the old per-commit
-        # dict list was the slowest driver step).
-        cons = _live_manifest_df(spark, out_dir)
-        if consolidate:
-            (
-                cons.coalesce(1)
-                .sortWithinPartitions("chunk_id")
-                .write.mode("overwrite")
-                .parquet(fsio.join(out_dir, "manifest.parquet"))
-            )
-            return spark.read.parquet(fsio.join(out_dir, "manifest.parquet"))
-        return cons
-    # small tables / object stores without a JVM connector: the scan
-    # projects to the manifest fields — per-chunk col_stats payloads
-    # never reach the driver.
-    done = live_chunks(scan_done_chunks(out_dir, spark, columns=_MANIFEST_FIELDS))
+    # queryable manifest table, sorted by chunk_id. The scan projects
+    # to the manifest fields: per-chunk col_stats payloads stay in the
+    # sidecars.
+    done = live_chunks(scan_done_chunks(out_dir, columns=_MANIFEST_FIELDS))
     rows = []
-    for m in done.values():
+    for _cid, m in sorted(done.items()):
         m = dict(m)
         m.pop("file_bytes", None)
         m.pop("replaces", None)  # compaction lineage stays sidecar-only
@@ -1141,7 +879,7 @@ def encode_files(
 
     todo = list(enumerate(plan["files"]))
     if resume:
-        done = done_chunk_ids(scan_done_chunks(out_dir, spark, columns=()))
+        done = done_chunk_ids(scan_done_chunks(out_dir, columns=()))
         todo = [(i, f) for i, f in todo if i not in done]
 
     chunks_dir = fsio.join(out_dir, "chunks")
@@ -1204,35 +942,20 @@ def compact_chunks(
 
     Merge groups pack ascending chunk ids to ``target_rows`` (default
     4x min_rows), preserving key-range adjacency so the zone map stays
-    selective. The merge work is distributed: one task per group
-    decodes its member chunks with the codec kernels and re-encodes
-    one merged chunk — the same mapInArrow shape as encode_files.
+    selective. Planning runs on the driver over one
+    :func:`scan_done_chunks` (n_rows/file per live chunk); the merge
+    work is distributed: one task per group decodes its member chunks
+    with the codec kernels and re-encodes one merged chunk — the same
+    mapInArrow shape as encode_files.
     """
     from ..functions.codecs import decode_array  # noqa: F401 (worker import check)
 
     # grouping needs only the LIVE chunks under min_rows (plus their
-    # n_rows/file): large tables collect exactly those candidate rows
-    # through a DataFrame filter — O(small), never the chunk dict
-    if _use_distributed_scan(spark, out_dir):
-        ver = _verified_sidecar_df(spark, out_dir, columns=("n_rows",))
-        small_rows = (
-            _live_df(ver)
-            .filter(F.col("n_rows") < int(min_rows))
-            .select("chunk_id", "n_rows", "file")
-            .collect()
-        )
-        small_meta = {
-            int(r["chunk_id"]): {"n_rows": int(r["n_rows"]), "file": r["file"]}
-            for r in small_rows
-        }
-        next_id_fn = lambda: _next_rewrite_id_df(ver)  # noqa: E731
-    else:
-        done = scan_done_chunks(out_dir, spark, columns=("n_rows",))
-        live = live_chunks(done)
-        small_meta = {
-            cid: m for cid, m in live.items() if m["n_rows"] < min_rows
-        }
-        next_id_fn = lambda: _next_rewrite_id(done)  # noqa: E731
+    # n_rows/file)
+    done = scan_done_chunks(out_dir, columns=("n_rows",))
+    small_meta = {
+        cid: m for cid, m in live_chunks(done).items() if m["n_rows"] < min_rows
+    }
     target_rows = target_rows or max(1, 4 * min_rows)
     small = sorted(small_meta)
     groups: list[list[int]] = []
@@ -1253,7 +976,7 @@ def compact_chunks(
             consolidate, verb="compact",
         )
 
-    next_id = next_id_fn()
+    next_id = _next_rewrite_id(done)
     plan_key = fsio.read_json(fsio.join(out_dir, "plan.json")).get("key", "doc_id")
     chunks_dir = fsio.join(out_dir, "chunks")
     manifest_dir = fsio.join(out_dir, "manifest")
@@ -1310,7 +1033,7 @@ def compact_chunks(
     mdf = wdf.mapInArrow(merge_group, schema=MANIFEST_SCHEMA)
     result = _finish_encode(spark, mdf, out_dir, consolidate, verb="compact")
     if gc:
-        gc_superseded(out_dir, spark)
+        gc_superseded(out_dir)
     return result
 
 
@@ -1330,7 +1053,7 @@ def delete_rows(
     chunks inside the predicate box.
 
     Candidate chunks come from the SAME zone-map prune decode uses
-    (per-column typed stats; driver sees only surviving file names):
+    (per-column typed stats over the driver's sidecar scan):
     chunks whose recorded [min, max] is disjoint with [lo, hi] are
     never touched — a targeted delete on a 100-TB table rewrites
     O(matching key range) chunks, not the table. Each candidate
@@ -1357,14 +1080,8 @@ def delete_rows(
     plan_key = plan.get("key", "doc_id")
     chunks_dir = fsio.join(out_dir, "chunks")
     manifest_dir = fsio.join(out_dir, "manifest")
-    # rewrite-id allocation: two scalar aggregates at scale, never the
-    # O(chunks) driver dict (the candidate files above already came
-    # from the distributed prune)
-    if _use_distributed_scan(spark, out_dir):
-        next_id = _next_rewrite_id_df(_verified_sidecar_df(spark, out_dir, columns=()))
-    else:
-        done = scan_done_chunks(out_dir, spark, columns=())
-        next_id = _next_rewrite_id(done) if done else 0
+    done = scan_done_chunks(out_dir, columns=())
+    next_id = _next_rewrite_id(done) if done else 0
     work = [
         (next_id + i, json.dumps({
             "member": int(fn.split("-")[1].split(".")[0]), "file": fn,
@@ -1449,7 +1166,7 @@ def delete_rows(
     mdf = wdf.mapInArrow(rewrite_chunk, schema=MANIFEST_SCHEMA)
     result = _finish_encode(spark, mdf, out_dir, consolidate, verb="delete")
     if gc:
-        gc_superseded(out_dir, spark)
+        gc_superseded(out_dir)
     return result
 
 
@@ -1464,9 +1181,8 @@ def _upsert_candidate_pairs(
     """Phase-1 (key, candidate chunk) pairing for :func:`upsert_rows`,
     O(K · matching chunks) — NEVER keys x chunks. ``live_idx`` is the
     candidate-chunk DataFrame (chunk_id, file, key_min, key_max,
-    new_id) — assembled distributed at scale, so per-chunk rows never
-    materialize on the driver; the joins broadcast it straight from
-    the executors:
+    new_id), built from the driver's sidecar scan; the joins
+    broadcast it:
 
     * range-plan GRID chunks: the persisted plan grid maps each batch
       key to its bucket (:func:`assign_buckets`, the same deterministic
@@ -1603,53 +1319,25 @@ def upsert_rows(
     # a RETRY of this generation must not rewrite its own prior
     # insert chunks (append-resume would then skip re-inserting them):
     # exclude the generation's bucket range from phase-1 candidates.
-    # Large tables assemble the candidate index as a DataFrame — the
-    # driver never holds a per-chunk dict (verdict r7 #2); small
-    # tables keep the cheap serial dict and lift it into the same
-    # DataFrame shape.
     gen_lo = int(generation) * GENERATION_STRIDE
     gen_hi = gen_lo + int(plan["n_chunks"])
-    _IDX_SCHEMA = (
-        "chunk_id long, file string, key_min string, key_max string, "
-        "new_id long"
-    )
+    done = scan_done_chunks(out_dir, columns=("key_min", "key_max"))
+    live = {
+        cid: m for cid, m in live_chunks(done).items()
+        if not (gen_lo <= cid < gen_hi)
+    }
     live_idx = None
-    if _use_distributed_scan(spark, out_dir):
-        from pyspark.sql.window import Window as _W
-
-        ver = _verified_sidecar_df(spark, out_dir, columns=("key_min", "key_max"))
-        live_base = _live_df(ver).filter(
-            ~(
-                (F.col("chunk_id") >= F.lit(gen_lo))
-                & (F.col("chunk_id") < F.lit(gen_hi))
-            )
+    if live:
+        base = _next_rewrite_id(done)
+        live_idx = spark.createDataFrame(
+            [
+                (int(cid), m["file"], m.get("key_min", ""),
+                 m.get("key_max", ""), int(base + i))
+                for i, (cid, m) in enumerate(sorted(live.items()))
+            ],
+            "chunk_id long, file string, key_min string, key_max string, "
+            "new_id long",
         )
-        if live_base.limit(1).count():
-            base = _next_rewrite_id_df(ver)
-            live_idx = live_base.select(
-                F.col("chunk_id").cast("long").alias("chunk_id"),
-                "file", "key_min", "key_max",
-            ).withColumn(
-                "new_id",
-                F.lit(int(base)) - 1 + F.row_number().over(_W.orderBy("chunk_id")),
-            )
-    else:
-        done = scan_done_chunks(out_dir, spark, columns=("key_min", "key_max"))
-        live = {
-            cid: m for cid, m in live_chunks(done).items()
-            if not (gen_lo <= cid < gen_hi)
-        }
-        if live:
-            base = _next_rewrite_id(done)
-            new_ids = {cid: base + i for i, cid in enumerate(sorted(live))}
-            live_idx = spark.createDataFrame(
-                [
-                    (int(cid), m["file"], m.get("key_min", ""),
-                     m.get("key_max", ""), int(new_ids[cid]))
-                    for cid, m in live.items()
-                ],
-                _IDX_SCHEMA,
-            )
     chunks_dir = fsio.join(out_dir, "chunks")
     manifest_dir = fsio.join(out_dir, "_staging", token)
     fsio.makedirs(manifest_dir)
@@ -1732,7 +1420,7 @@ def upsert_rows(
         consolidate, verb="upsert",
     )
     if gc:
-        gc_superseded(out_dir, spark)
+        gc_superseded(out_dir)
     return result
 
 
@@ -1788,7 +1476,7 @@ def rewrite_clustered(
         ):
             fsio.delete_dir(fsio.join(out_dir, "_staging", d))
 
-    done = scan_done_chunks(out_dir, spark, columns=())
+    done = scan_done_chunks(out_dir, columns=())
     old_ids = sorted(live_chunks(done))
     if not old_ids:
         raise ValueError(f"{out_dir} has no live chunks to re-cluster")
@@ -1874,88 +1562,47 @@ def rewrite_clustered(
         consolidate, verb="rewrite_clustered",
     )
     if gc:
-        gc_superseded(out_dir, spark)
+        gc_superseded(out_dir)
     return result
 
 
-def gc_superseded(out_dir: str, spark: SparkSession | None = None) -> int:
+def gc_superseded(out_dir: str) -> int:
     """Delete sidecars+files of chunks superseded by verified
-    compacted chunks. Pure garbage collection: the read view already
-    excludes them, so this is idempotent and crash-safe to re-run.
+    compacted chunks; returns how many victims it actually deleted.
+    Pure garbage collection: the read view already excludes them, so
+    this is idempotent and crash-safe to re-run. The victim list
+    comes from one :func:`scan_done_chunks`, and the deletes run on
+    the driver, one or two per victim.
 
-    With a spark handle and a large victim list the deletes run as one
-    distributed mapInArrow pass (verdict r6 #5): at a 100-TB table's
-    compaction cadence, serial driver-side ``delete_file`` round trips
-    against an object store would cost hours of driver wall; the victim
-    LIST itself is driver-light (ids + file names only). Tasks tolerate
-    already-missing files so a crashed GC re-runs cleanly.
+    Committed-but-unfolded staging dirs (a crash between an upsert's
+    commit marker and its fold) are folded into ``manifest/`` first,
+    so every victim's sidecar is where GC deletes it: a staged
+    sidecar left behind would later fold back into the manifest and
+    resurrect a retired chunk whose file is gone.
 
     Snapshot retention (operators/snapshots.py): a chunk referenced by
     ANY retained snapshot is never collected even when the live view
     superseded it — time travel to that version must keep working.
     ``expire_snapshots`` is what releases those chunks to a later GC."""
-    if _use_distributed_scan(spark, out_dir):
-        # victims = verified sidecars some replacement superseded —
-        # ONE semi-join; the driver receives only the victim rows
-        # (the work list itself), never the full chunk dict
-        ver = _verified_sidecar_df(spark, out_dir, columns=())
-        replaced = ver.select(F.explode("replaces").alias("_rid")).distinct()
-        victims = [
-            (int(r["chunk_id"]), r["file"])
-            for r in ver.join(
-                replaced, ver["chunk_id"] == replaced["_rid"], "left_semi"
-            ).select("chunk_id", "file").collect()
-        ]
-    else:
-        done = scan_done_chunks(out_dir, spark, columns=())
-        live = live_chunks(done)
-        victims = [
-            (int(cid), m["file"]) for cid, m in done.items() if cid not in live
-        ]
-    from .snapshots import list_snapshots, referenced_files_df, referenced_ids
+    _fold_committed_staging(out_dir)
+    done = scan_done_chunks(out_dir, columns=())
+    live = live_chunks(done)
+    victims = [
+        (int(cid), m["file"]) for cid, m in done.items() if cid not in live
+    ]
+    if victims:
+        from .snapshots import referenced_ids
 
-    has_snaps = bool(victims) and bool(list_snapshots(out_dir))
-    if has_snaps and not (
-        spark is not None and len(victims) >= _DISTRIBUTED_SCAN_MIN
-    ):
-        # small victim lists: one driver-side set filter (the serial
-        # GC's own memory shape); the DISTRIBUTED branch below anti-
-        # joins against the snapshot parquets instead, so retained
-        # membership never materializes on the driver at scale
         ref = referenced_ids(out_dir) or set()
         victims = [(cid, f) for cid, f in victims if cid not in ref]
-    if spark is not None and len(victims) >= _DISTRIBUTED_SCAN_MIN:
-
-        def drop(batches):
-            for b in batches:
-                n = sum(
-                    _delete_victim(out_dir, row["chunk_id"], row["file"])
-                    for row in b.to_pylist()
-                )
-                yield pa.RecordBatch.from_pylist(
-                    [{"n": n}], schema=pa.schema([("n", pa.int64())])
-                )
-
-        vdf = spark.createDataFrame(victims, "chunk_id int, file string")
-        if has_snaps:
-            ref = referenced_files_df(spark, out_dir)
-            if ref is not None:
-                vdf = vdf.join(ref, "chunk_id", "left_anti")
-        vdf = vdf.repartition(
-            max(1, min(len(victims) // 256 + 1,
-                       spark.sparkContext.defaultParallelism))
-        )
-        total = vdf.mapInArrow(drop, schema="n bigint").agg(F.sum("n")).first()[0]
-        return int(total or 0)
     return sum(_delete_victim(out_dir, cid, fname) for cid, fname in victims)
 
 
 def _delete_victim(out_dir: str, chunk_id: int, fname: str) -> bool:
     """Delete a superseded chunk's sidecar and chunk file; True when
     either was actually removed. Missing files are tolerated: a re-run
-    after a crashed GC, or a victim whose sidecar lives only in a
-    committed-but-unfolded ``_staging`` dir, must not break the
-    idempotent re-run promise — and is not counted again."""
+    after a crashed GC must not break the idempotent re-run promise —
+    and is not counted again."""
     removed = False
     for path in (
         fsio.join(out_dir, "manifest", f"{int(chunk_id):05d}.json"),

@@ -19,12 +19,14 @@ keep the round-6 behavior exactly — GC frees superseded chunks
 immediately and there is no per-commit snapshot write.
 
 Scale shape: a snapshot is one row per live chunk (id, file, n_rows —
-a few MB at ~10^5-10^6 chunks), written FROM the distributed live
-manifest (`encode._live_manifest_df`) on big tables so no per-chunk
-row crosses the driver; the marker is O(1). Reference parity: the
-reference library has no versioning (it reads/writes whole files,
-/root/reference/arrow_pd_parser/_readers.py); this generalizes its
-"what you wrote is what you read back" contract across table history.
+a few MB at ~10^5-10^6 chunks), built on the driver from the same
+sidecar scan every read uses (`encode.scan_done_chunks`) and committed
+as one parquet put; the marker is O(1). GC's retention check reads
+the retained snapshots' chunk ids on the driver (:func:`referenced_ids`).
+Reference parity: the reference library has no versioning (it
+reads/writes whole files, /root/reference/arrow_pd_parser/_readers.py);
+this generalizes its "what you wrote is what you read back" contract
+across table history.
 """
 
 from __future__ import annotations
@@ -36,8 +38,6 @@ import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
 
 from ..sources import fsio
-
-SNAP_DF_SCHEMA = "chunk_id int, file string, n_rows bigint"
 
 _SNAP_ARROW_SCHEMA = pa.schema(
     [
@@ -108,43 +108,22 @@ def write_snapshot(spark: SparkSession | None, out_dir: str, verb: str) -> int:
     """Persist the current LIVE VERIFIED chunk membership as the next
     snapshot version; returns the version. Data-then-marker: the
     parquet is fully durable before the marker commit, so a crash
-    leaves an ignored orphan dir, never a half-readable snapshot."""
-    from .encode import (
-        _DISTRIBUTED_SCAN_MIN,
-        _live_manifest_df,
-        jvm_handles_scheme,
-        live_chunks,
-        scan_done_chunks,
-    )
+    leaves an ignored orphan dir, never a half-readable snapshot.
+    ``spark`` is accepted but unused."""
+    from .encode import live_chunks, scan_done_chunks
 
     version = _next_version(out_dir)
     data_dir = _data_dir(out_dir, version)
-    n_sidecars = sum(
-        1 for fn, _sz in fsio.list_files(fsio.join(out_dir, "manifest"))
-        if fn.endswith(".json")
+    fsio.makedirs(data_dir)
+    live = live_chunks(scan_done_chunks(out_dir, columns=("n_rows",)))
+    rows = [
+        {"chunk_id": int(cid), "file": m["file"], "n_rows": int(m["n_rows"])}
+        for cid, m in sorted(live.items())
+    ]
+    fsio.write_parquet_atomic(
+        pa.Table.from_pylist(rows, schema=_SNAP_ARROW_SCHEMA),
+        fsio.join(data_dir, "snap-00000.parquet"),
     )
-    if (
-        spark is not None
-        and n_sidecars >= _DISTRIBUTED_SCAN_MIN
-        and jvm_handles_scheme(spark, out_dir)
-    ):
-        (
-            _live_manifest_df(spark, out_dir)
-            .select("chunk_id", "file", "n_rows")
-            .write.mode("overwrite")
-            .parquet(data_dir)
-        )
-    else:
-        fsio.makedirs(data_dir)
-        live = live_chunks(scan_done_chunks(out_dir, spark, columns=("n_rows",)))
-        rows = [
-            {"chunk_id": int(cid), "file": m["file"], "n_rows": int(m["n_rows"])}
-            for cid, m in sorted(live.items())
-        ]
-        fsio.write_parquet_atomic(
-            pa.Table.from_pylist(rows, schema=_SNAP_ARROW_SCHEMA),
-            fsio.join(data_dir, "snap-00000.parquet"),
-        )
     import time as _time
 
     fsio.write_json_atomic(
@@ -209,7 +188,7 @@ def resolve_version(out_dir: str, as_of) -> int:
 
 def read_snapshot_arrow(out_dir: str, version: int) -> pa.Table:
     """One snapshot's membership as an arrow table (driver-side read —
-    used by the serial prune path and small-table GC)."""
+    used by the as_of prune, table_changes and GC)."""
     import pyarrow.parquet as _pq
 
     if not fsio.exists(_marker_path(out_dir, version)):
@@ -233,38 +212,9 @@ def read_snapshot_arrow(out_dir: str, version: int) -> pa.Table:
     return pa.concat_tables([t.cast(_SNAP_ARROW_SCHEMA) for t in parts])
 
 
-def snapshot_df(spark: SparkSession, out_dir: str, version: int) -> DataFrame:
-    """One snapshot's membership as a DataFrame (distributed read when
-    the JVM can open the scheme)."""
-    from .encode import jvm_handles_scheme
-
-    if not fsio.exists(_marker_path(out_dir, version)):
-        read_snapshot_arrow(out_dir, version)  # raises the right error
-    if jvm_handles_scheme(spark, out_dir):
-        return (
-            spark.read.schema(SNAP_DF_SCHEMA)
-            .parquet(_data_dir(out_dir, version))
-        )
-    t = read_snapshot_arrow(out_dir, version)
-    return spark.createDataFrame(t.to_pylist(), SNAP_DF_SCHEMA)
-
-
-def referenced_files_df(spark: SparkSession, out_dir: str) -> DataFrame | None:
-    """chunk_ids referenced by ANY retained snapshot (distinct), or
-    None when the table has no snapshots — GC's retention input."""
-    snaps = list_snapshots(out_dir)
-    if not snaps:
-        return None
-    dfs = [snapshot_df(spark, out_dir, m["version"]) for m in snaps]
-    ref = dfs[0].select("chunk_id")
-    for d in dfs[1:]:
-        ref = ref.unionByName(d.select("chunk_id"))
-    return ref.distinct()
-
-
 def referenced_ids(out_dir: str) -> set[int] | None:
-    """Driver-side twin of :func:`referenced_files_df` for the serial
-    GC path (small tables)."""
+    """chunk_ids referenced by ANY retained snapshot, or None when the
+    table has no snapshots — GC's retention input."""
     snaps = list_snapshots(out_dir)
     if not snaps:
         return None

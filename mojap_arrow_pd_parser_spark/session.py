@@ -56,13 +56,6 @@ def get_spark(
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        # shuffle/spill codec, env-parameterised (guide §2.3: lz4 vs
-        # zstd is workload-dependent — measure both); default stays
-        # Spark's lz4
-        .config(
-            "spark.io.compression.codec",
-            os.environ.get("SPARK_GRAFT_IO_CODEC", "lz4"),
-        )
         # tokens rows are ~2KB wide; 8192-row Arrow batches (~16MB) keep
         # python-worker memory flat and pipeline JVM<->Python transfer
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "8192")

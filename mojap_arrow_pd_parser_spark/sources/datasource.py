@@ -33,8 +33,8 @@ metadata pruning wired into Catalyst's filter pushdown:
 
 Scale shape: planning (partition listing, pruning, snapshot diffs)
 runs on the driver over sidecar metadata — file names and typed
-min/max only, the same driver-weight contract as
-``decode._live_pruned_files``'s serial branch; chunk payloads are
+min/max only, through the same ``decode._live_pruned_files`` scan
+every read uses; chunk payloads are
 only ever opened inside ``read()`` on executors, decoded by the
 package codec kernels straight to Arrow batches.
 

@@ -141,7 +141,7 @@ class EncodedTable:
     def gc(self) -> int:
         from .operators.encode import gc_superseded
 
-        return gc_superseded(self.path, self.spark)
+        return gc_superseded(self.path)
 
     def snapshots(self) -> list[dict]:
         from .operators.snapshots import list_snapshots

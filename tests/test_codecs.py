@@ -304,53 +304,6 @@ class TestColumnCodec:
             meta, payload = _arrow_roundtrip(arr)
             assert len(payload) < 0.6 * vals.nbytes, (name, len(payload), vals.nbytes)
 
-    def test_clustered_list_roundtrip_and_ratio(self):
-        """Mixed-regime rows (the production shape): clustering must
-        round-trip exactly and beat the flat chunk-level encoding."""
-        from mojap_arrow_pd_parser_spark.functions.codecs import column as colmod
-
-        rng = np.random.default_rng(9)
-        rows = []
-        for i in range(400):
-            regime = i % 5
-            n = int(rng.integers(20, 400))
-            if regime == 0:
-                rows.append(np.repeat(rng.integers(0, 5000, max(1, n // 30)), 30)[:n].astype(np.int32))
-            elif regime == 1:
-                rows.append(np.cumsum(rng.integers(0, 6, n)).astype(np.int32))
-            elif regime == 2:
-                rows.append(rng.integers(0, 1 << 12, n).astype(np.int32))
-            elif regime == 3:
-                rows.append(rng.integers(-(2**31), 2**31 - 1, n).astype(np.int32))
-            else:
-                vocab = rng.integers(0, 2**31 - 1, 16)
-                rows.append(rng.choice(vocab, n).astype(np.int32))
-        rows[7] = np.zeros(0, dtype=np.int32)  # empty row edge
-        arr = pa.array([r.tolist() for r in rows], type=pa.list_(pa.int32()))
-        colmod.CLUSTER_ENABLED = True
-        try:
-            meta, payload = _arrow_roundtrip(arr)
-            assert meta.get("clustered") is True
-            # cascade-free comparison: clustering must beat flat
-            _, clustered_nc = encode_array(arr, cascade=None)
-            colmod.CLUSTER_ENABLED = False
-            _, flat_nc = encode_array(arr, cascade=None)
-        finally:
-            colmod.CLUSTER_ENABLED = False
-        assert len(clustered_nc) < 0.9 * len(flat_nc), (len(clustered_nc), len(flat_nc))
-
-    def test_clustered_skipped_for_homogeneous(self):
-        rng = np.random.default_rng(10)
-        rows = [np.cumsum(rng.integers(0, 4, 100)).astype(np.int32).tolist() for _ in range(200)]
-        arr = pa.array(rows, type=pa.list_(pa.int32()))
-        from mojap_arrow_pd_parser_spark.functions.codecs import column as colmod
-        colmod.CLUSTER_ENABLED = True
-        try:
-            meta, _ = _arrow_roundtrip(arr)
-        finally:
-            colmod.CLUSTER_ENABLED = False
-        assert not meta.get("clustered")
-
     def test_sliced_array(self):
         base = pa.array(list(range(100)), type=pa.int32())
         _arrow_roundtrip(base.slice(10, 50))

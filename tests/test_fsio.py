@@ -136,19 +136,17 @@ class TestS3ScanPath:
         assert fsio.file_size("s3a://engine-test/h/x.bin") == 5
 
     def test_many_sidecar_s3_scan_takes_arrow_fallback(self, spark, moto_s3):
-        """>= _DISTRIBUTED_SCAN_MIN sidecars on s3:// with NO
-        hadoop-aws on the classpath: the distributed scan must route
-        through the mapInArrow fsio fallback (spark.read.json would
-        raise 'No FileSystem for scheme: s3') and still verify sizes
-        against one chunk-dir listing. Covers decode/resume/
-        consolidation of big object-store tables on a connector-less
-        Spark build."""
+        """A few hundred sidecars on s3:// with NO hadoop-aws on the
+        classpath: the manifest scan reads them through pyarrow.fs
+        (never the JVM) and flags the one size mismatch. Decode,
+        resume and consolidation of object-store tables all stand on
+        this scan."""
         from mojap_arrow_pd_parser_spark.operators.encode import (
-            _DISTRIBUTED_SCAN_MIN, jvm_handles_scheme, scan_sidecars,
+            jvm_handles_scheme, scan_sidecars,
         )
 
         base = "s3://engine-test/big-scan"
-        n = _DISTRIBUTED_SCAN_MIN + 20
+        n = 276
         for cid in range(n):
             body = b"x" * (10 + cid % 5)
             moto_s3.put_object(
@@ -177,12 +175,11 @@ class TestS3ScanPath:
             )
         # this Spark build has no S3 connector -> probe must say so
         assert jvm_handles_scheme(spark, base) is False
-        dist = scan_sidecars(base, spark)
-        serial = scan_sidecars(base)
-        assert dist == serial
-        assert len(dist) == n
-        assert dist[7]["_verified"] is False  # size mismatch flagged
-        assert dist[8]["_verified"] is True
+        out = scan_sidecars(base)
+        assert sorted(out) == list(range(n))
+        assert out[7]["_verified"] is False  # size mismatch flagged
+        assert all(out[c]["_verified"] for c in out if c != 7)
+        assert out[8]["file_bytes"] == 13
 
 
 class TestS3WritePath:

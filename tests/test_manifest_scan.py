@@ -1,13 +1,14 @@
-"""Distributed manifest/sidecar scan (operators/encode.py).
+"""Manifest/sidecar scan (operators/encode.py) and the views built on it.
 
-At 100-TB scale (~400k chunks) the sidecar scan must not do O(chunks)
-serial driver round trips: with a spark handle and enough sidecars it
-becomes ONE spark.read.json over the manifest directory plus ONE paged
-chunk-dir listing. These tests build a 10k-sidecar table and assert
-(a) the distributed path reads no sidecar through the driver,
-(b) it returns exactly what the serial path returns, including
-corrupt-sidecar skips, size-mismatch damage flags and compaction
-``replaces`` lineage, (c) small tables keep the cheap serial loop.
+Every read, stats call and verb answers its manifest questions through
+one driver-side scan, at every table size: ``scan_sidecars`` reads each
+sidecar once and verifies chunk sizes against ONE listing of
+``chunks/``; ``live_chunks`` / ``done_chunk_ids`` derive the read and
+resume views. These tests pin that scan's contract on hand-written
+tables: corrupt and malformed sidecars are skipped, size mismatches
+flag damage, compaction ``replaces`` lineage retires chunks, and the
+zone-map/bloom prune keeps exactly the chunks the closed-form ranges
+say it must. A 300-chunk verb sequence checks the same path end to end.
 """
 
 from __future__ import annotations
@@ -25,7 +26,8 @@ from mojap_arrow_pd_parser_spark.operators.encode import (
     scan_sidecars,
 )
 
-N_SIDECARS = 10_000
+#: > 1000 so the fixtures' %1000==999 compaction lineage exists
+N_SIDECARS = 1_200
 
 
 def _write_table(root: str, n: int) -> None:
@@ -55,61 +57,66 @@ def _write_table(root: str, n: int) -> None:
             m["replaces"] = [cid - 1, cid - 2]
         with open(f"{root}/manifest/{cid:05d}.json", "w") as f:
             f.write(json.dumps(m))
-    # a partial sidecar from a killed run -> skipped by both paths
+    # a partial sidecar from a killed run -> skipped
     with open(f"{root}/manifest/zzzzz.json", "w") as f:
         f.write('{"chunk_id": 99999, "n_ro')
     # a malformed-but-parseable sidecar: no file_bytes AND no chunk
-    # file. Serial path skips it (KeyError/OSError); the distributed
-    # path must NOT mark it verified via None == None.
+    # file -> skipped, never verified through a None == None compare
     with open(f"{root}/manifest/yyyyy.json", "w") as f:
         f.write(json.dumps({"chunk_id": 77777, "file": "chunk-77777.parquet",
                             "status": "ok"}))
-    # a size-mismatched chunk -> _verified False on both paths
+    # a size-mismatched chunk -> _verified False
     with open(f"{root}/chunks/chunk-00003.parquet", "ab") as f:
         f.write(b"extra")
 
 
 @pytest.fixture(scope="module")
-def table_10k(tmp_path_factory):
-    root = str(tmp_path_factory.mktemp("manifest10k") / "enc")
+def table_small(tmp_path_factory):
+    root = str(tmp_path_factory.mktemp("manifest") / "enc")
     _write_table(root, N_SIDECARS)
     return root
 
 
-def test_distributed_scan_reads_no_sidecar_on_driver(spark, table_10k, monkeypatch):
+def test_scan_verifies_sizes_with_one_chunk_listing(table_small, monkeypatch):
+    """Size verification uses ONE listing of chunks/, never a stat
+    per chunk file (one round trip instead of O(chunks) on an object
+    store)."""
     from mojap_arrow_pd_parser_spark.sources import fsio
 
-    calls = {"read_json": 0, "file_size": 0}
-    real_read = fsio.read_json
+    listed = []
+    real_list = fsio.list_files
     monkeypatch.setattr(
-        fsio, "read_json",
-        lambda p: calls.__setitem__("read_json", calls["read_json"] + 1) or real_read(p),
+        fsio, "list_files", lambda p: listed.append(p) or real_list(p)
     )
-    real_size = fsio.file_size
     monkeypatch.setattr(
         fsio, "file_size",
-        lambda p: calls.__setitem__("file_size", calls["file_size"] + 1) or real_size(p),
+        lambda p: pytest.fail(f"scan stat'ed a chunk file: {p}"),
     )
-    out = scan_sidecars(table_10k, spark)
-    # the whole scan: zero per-sidecar driver reads, zero per-file stats
-    assert calls == {"read_json": 0, "file_size": 0}
+    out = scan_sidecars(table_small)
     assert len(out) == N_SIDECARS
+    assert listed.count(fsio.join(table_small, "chunks")) == 1
 
 
-def test_distributed_matches_serial(spark, table_10k):
-    serial = scan_sidecars(table_10k)  # no spark -> driver loop
-    dist = scan_sidecars(table_10k, spark)
-    assert len(serial) == len(dist) == N_SIDECARS
-    assert serial == dist
-    # the no-file_bytes/no-file sidecar is absent from BOTH views (a
+def test_distributed_matches_serial(table_small):
+    """The scan's skip/flag/lineage contract (the name predates the
+    removal of the distributed twin this test once compared against)."""
+    out = scan_sidecars(table_small)
+    assert len(out) == N_SIDECARS
+    # the partial and the no-file_bytes/no-file sidecars are skipped (a
     # damaged table must not pass verification through a null size)
-    assert 77777 not in serial and 77777 not in dist
-    # damage flag preserved
-    assert dist[3]["_verified"] is False
-    assert dist[4]["_verified"] is True
-    # compaction lineage preserved -> live view identical
-    assert dist[999]["replaces"] == [998, 997]
-    assert set(live_chunks(dist)) == set(live_chunks(serial))
+    assert 99999 not in out and 77777 not in out
+    # damage flag
+    assert out[3]["_verified"] is False
+    assert out[4]["_verified"] is True
+    # compaction lineage -> live view retires the replaced chunks
+    assert out[999]["replaces"] == [998, 997]
+    live = live_chunks(out)
+    assert 999 in live and 998 not in live and 997 not in live
+    assert len(live) == N_SIDECARS - 2
+    # scan_done_chunks keeps only verified sidecars, without the flag
+    done = enc_mod.scan_done_chunks(table_small)
+    assert set(done) == set(out) - {3}
+    assert all("_verified" not in m for m in done.values())
 
 
 def _write_clean_table(root: str, n: int) -> None:
@@ -171,147 +178,108 @@ def _write_clean_table(root: str, n: int) -> None:
             f.write(json.dumps(m))
 
 
-N_CLEAN = 10_000
+N_CLEAN = 2_000
 _PLAN = {"key": "doc_id", "key_type": "string"}
+#: live ids of _write_clean_table(N_CLEAN): each %1000==999 chunk
+#: retires the two ids below it
+_LIVE = set(range(N_CLEAN)) - {997, 998, 1997, 1998}
 
 
 @pytest.fixture(scope="module")
-def clean_10k(tmp_path_factory):
-    root = str(tmp_path_factory.mktemp("prune10k") / "enc")
+def clean_table(tmp_path_factory):
+    root = str(tmp_path_factory.mktemp("prune") / "enc")
     _write_clean_table(root, N_CLEAN)
     return root
 
 
-def _prune_both_paths(spark, root, kr=None, wh=None):
-    """(distributed, serial) results of _live_pruned_files."""
-    from mojap_arrow_pd_parser_spark.operators.decode import _live_pruned_files
+def _ids(lo: int, hi: int) -> set[int]:
+    return set(range(lo, hi + 1))
 
-    dist = sorted(_live_pruned_files(spark, root, _PLAN, kr, wh))
-    serial = sorted(_live_pruned_files(None, root, _PLAN, kr, wh))
-    return dist, serial
+
+#: (key_range, where, surviving chunk ids), the survivors worked out
+#: by hand from _write_clean_table's ranges
+_PRUNE_CASES = [
+    (None, None, _LIVE),
+    (("doc00010", "doc00020"), None, _ids(10, 20)),
+    (None, ("val", 100, 259), _ids(10, 25)),
+    (None, ("val", 100.5, 250.5), _ids(10, 25)),  # float bounds vs int stats
+    (None, ("fval", 3.0, 7.25), _ids(2, 6)),      # float stats
+    (None, ("cat", "s00010", "s00020"), _ids(10, 20)),
+    (None, ("nope", 1, 2), _LIVE),                # unmapped column -> no prune
+    (None, ("val", True, True), _LIVE),           # bool bounds -> no prune
+    (None, ("big", 2**60 + 5, 2**60 + 10), _ids(5, 10)),  # int64 > 2^53: exact
+    (None, ("val", 10**9, 2 * 10**9), set()),     # empty survivors
+    (("doc00010", "doc00100"), ("val", 100, 259), _ids(10, 25)),
+    # tagged domains (decimal / timestamp / date zone maps)
+    (None, ("dval", Decimal("10.30"), Decimal("20.50")), _ids(10, 20)),
+    (None, ("dval", 10.3, 20.5), _ids(10, 20)),   # float bounds on dec stats
+    (None, ("dval", 12, 19), _ids(12, 18)),       # int bounds on dec stats
+    (None, ("dval", "a", "b"), _LIVE),            # string bounds: no prune
+    (None, ("dval", Decimal("1e30"), Decimal("2e30")), set()),
+    # exact-boundary case: lo sits 1e-16 above chunk 13's "13.75" max,
+    # so the exact decimal compare prunes chunk 13 (a double compare
+    # would round lo to 13.75 and keep it)
+    (None, ("dval", Decimal("13.7500000000000001"), Decimal("20.25")),
+     _ids(14, 20)),
+    # bounds beyond decimal(38): still exact, everything pruned
+    (None, ("dval", Decimal("1e40"), Decimal("2e40")), set()),
+    (None, ("tval", dtm.datetime(2024, 1, 1, 0, 10),
+            dtm.datetime(2024, 1, 1, 0, 20)), _ids(10, 20)),
+    (None, ("tval", 100, 200), _LIVE),            # numeric bounds: no prune
+    (None, ("dtval", dtm.date(2020, 2, 1), dtm.date(2020, 2, 10)), _ids(31, 40)),
+    (None, ("dtval", dtm.datetime(2020, 2, 1),
+            dtm.datetime(2020, 2, 10)), _LIVE),   # datetime vs date: keep
+]
+
+
+def _case_id(i: int, kr, wh) -> str:
+    """The id pytest derives for a (kr, wh) pair, so case ids stay
+    stable now that each case carries its expected survivors."""
+    return "-".join(
+        "None" if v is None else f"{name}{i}"
+        for name, v in (("kr", kr), ("wh", wh))
+    )
 
 
 @pytest.mark.parametrize(
-    "kr,wh",
+    "kr,wh,want",
     [
-        (None, None),
-        (("doc00010", "doc00020"), None),
-        (None, ("val", 100, 259)),
-        (None, ("val", 100.5, 250.5)),   # float bounds vs int stats
-        (None, ("fval", 3.0, 7.25)),     # float stats
-        (None, ("cat", "s00010", "s00020")),
-        (None, ("nope", 1, 2)),          # unmapped column -> no prune
-        (None, ("val", True, True)),     # bool bounds -> no prune
-        (None, ("big", 2**60 + 5, 2**60 + 10)),  # int64 > 2^53: exact
-        (None, ("val", 10**9, 2 * 10**9)),       # empty survivors
-        (("doc00010", "doc00100"), ("val", 100, 259)),
-        # tagged domains (decimal / timestamp / date zone maps)
-        (None, ("dval", Decimal("10.30"), Decimal("20.50"))),
-        (None, ("dval", 10.3, 20.5)),            # float bounds on dec stats
-        (None, ("dval", 12, 19)),                # int bounds on dec stats
-        (None, ("dval", "a", "b")),              # string bounds: no prune
-        (None, ("dval", Decimal("1e30"), Decimal("2e30"))),  # empty survivors
-        # exact-boundary case (VERDICT r5 #7): lo sits 1e-16 above the
-        # "13.75" stat max — EXACT decimal pruning skips chunk 13 (as
-        # the serial path always did) where the old 2-ULP-widened
-        # double compare kept it (13.7500000000000001 rounds to the
-        # double 13.75, and widening only moves further away)
-        (None, ("dval", Decimal("13.7500000000000001"), Decimal("20.25"))),
-        # bounds beyond decimal(38): exact path declines, widened
-        # double fallback still prunes everything conservatively
-        (None, ("dval", Decimal("1e40"), Decimal("2e40"))),
-        (None, ("tval", dtm.datetime(2024, 1, 1, 0, 10),
-                dtm.datetime(2024, 1, 1, 0, 20))),
-        (None, ("tval", 100, 200)),              # numeric bounds: no prune
-        (None, ("dtval", dtm.date(2020, 2, 1), dtm.date(2020, 2, 10))),
-        (None, ("dtval", dtm.datetime(2020, 2, 1),
-                dtm.datetime(2020, 2, 10))),     # datetime vs date: keep
+        pytest.param(kr, wh, want, id=_case_id(i, kr, wh))
+        for i, (kr, wh, want) in enumerate(_PRUNE_CASES)
     ],
 )
-def test_distributed_prune_matches_serial(spark, clean_10k, kr, wh):
-    dist, serial = _prune_both_paths(spark, clean_10k, kr, wh)
-    assert dist == serial
-    if kr == wh is None:
-        # live view: the %1000==999 compacted chunks retired 2 each
-        assert len(dist) == N_CLEAN - 2 * (N_CLEAN // 1000)
-
-
-def test_distributed_prune_driver_materializes_only_survivors(
-    spark, clean_10k, monkeypatch
-):
-    """The 100-TB contract: the driver collects ONE aggregate row plus
-    the surviving file names — never per-sidecar col_stats payloads."""
-    # patch the CONCRETE class (pyspark.sql.DataFrame is an ABC in 4.x)
-    from pyspark.sql.classic.dataframe import DataFrame
+def test_distributed_prune_matches_serial(clean_table, kr, wh, want):
+    """The zone-map prune keeps exactly the closed-form survivors (the
+    name predates the removal of the distributed twin this test once
+    compared against)."""
     from mojap_arrow_pd_parser_spark.operators.decode import _live_pruned_files
 
-    collected = []
-    real = DataFrame.collect
-
-    def spy(self):
-        rows = real(self)
-        collected.append((len(rows), list(self.columns)))
-        return rows
-
-    monkeypatch.setattr(DataFrame, "collect", spy)
-    files = _live_pruned_files(
-        spark, clean_10k, _PLAN, None, ("val", 100, 259)
-    )
-    assert len(files) == 16  # chunks 10..25 overlap [100, 259]
-    assert sum(n for n, _ in collected) == 1 + len(files)
-    assert all("col_stats" not in cols for _, cols in collected)
+    got = _live_pruned_files(None, clean_table, _PLAN, kr, wh)
+    assert sorted(got) == sorted(f"chunk-{cid:05d}.parquet" for cid in want)
 
 
-def test_distributed_prune_damage_raises_like_serial(spark, table_10k, monkeypatch):
-    """Damage (size-mismatched chunk 3) raises on BOTH paths, even when
-    pruning would have skipped the damaged chunk."""
+def test_distributed_prune_damage_raises_like_serial(table_small):
+    """Damage (size-mismatched chunk 3) raises even when pruning would
+    have skipped the damaged chunk: verification precedes the prune."""
     from mojap_arrow_pd_parser_spark.operators.decode import _live_pruned_files
 
-    for sess in (spark, None):
-        with pytest.raises(IOError, match=r"damaged or incomplete.*3"):
-            _live_pruned_files(
-                sess, table_10k, _PLAN, ("doc09000", "doc09010"), None
-            )
+    with pytest.raises(IOError, match=r"damaged or incomplete.*3"):
+        _live_pruned_files(
+            None, table_small, _PLAN, ("doc01100", "doc01110"), None
+        )
 
 
 class TestDriverLightScans:
-    """Resume/compact/GC scans must be driver-light at 400k-chunk
-    scale: the ``columns`` projection keeps per-sidecar ``col_stats``
-    (and other heavy JSON) out of every DataFrame the driver
-    collects. Structural assertions here are scale-invariant — the
-    10k fixture proves the same bytes/row contract as 400k would."""
-
-    def test_distributed_projection_collects_core_fields_only(
-        self, spark, clean_10k, monkeypatch
-    ):
-        from pyspark.sql.classic.dataframe import DataFrame
-
-        collected = []
-        real = DataFrame.collect
-
-        def spy(self):
-            rows = real(self)
-            collected.append(list(self.columns))
-            return rows
-
-        monkeypatch.setattr(DataFrame, "collect", spy)
-        out = scan_sidecars(clean_10k, spark, columns=())
-        assert len(out) == N_CLEAN
-        assert collected, "distributed path did not run"
-        core = set(enc_mod._SIDECAR_CORE_FIELDS)
-        assert all(set(cols) <= core for cols in collected)
-        assert all(
-            "col_stats" not in m and "codecs" not in m for m in out.values()
-        )
-        # lineage survives the projection (it is a core field)
-        assert out[999]["replaces"] == [998, 997]
+    """The ``columns`` projection keeps per-sidecar ``col_stats`` (and
+    other heavy JSON) out of the resume/compact/GC views, and out of
+    every DataFrame those verbs build."""
 
     def test_resume_consolidate_compact_gc_never_collect_col_stats(
         self, spark, tmp_path, monkeypatch
     ):
-        """End-to-end: a real encode -> resume -> compact -> gc cycle
-        with the distributed threshold forced low; NO DataFrame the
-        driver collects on those paths may carry a col_stats column."""
+        """End-to-end: a real encode -> resume -> compact -> gc cycle;
+        NO DataFrame the driver collects on those paths may carry a
+        col_stats column."""
         from pyspark.sql import functions as F
         from pyspark.sql.classic.dataframe import DataFrame
 
@@ -319,7 +287,6 @@ class TestDriverLightScans:
             compact_chunks, encode_table, gc_superseded,
         )
 
-        monkeypatch.setattr(enc_mod, "_DISTRIBUTED_SCAN_MIN", 4)
         df = spark.range(0, 2000).select(
             F.concat(F.lit("doc_"), F.lpad(F.col("id").cast("string"), 8, "0")
                      ).alias("doc_id"),
@@ -339,8 +306,7 @@ class TestDriverLightScans:
         monkeypatch.setattr(DataFrame, "collect", spy)
         encode_table(spark, df, out, key="doc_id", n_chunks=8)  # resume no-op
         compact_chunks(spark, out, min_rows=1000)
-        gc_superseded(out, spark)
-        assert collected
+        gc_superseded(out)
         assert all("col_stats" not in cols for cols in collected)
 
     def test_serial_projection_matches(self, tmp_path):
@@ -355,41 +321,28 @@ class TestDriverLightScans:
             assert m["n_rows"] == full[cid]["n_rows"]
 
 
-def test_arrow_fallback_scan_matches_jvm_path(spark, tmp_path, monkeypatch):
-    """When the JVM has no FileSystem for the scheme, the distributed
-    scan must fall back to mapInArrow fsio reads and return exactly
-    the spark.read.json result — including malformed-sidecar skips,
-    damage flags and lineage. Forced here by stubbing the probe."""
-    root = str(tmp_path / "arrowfb")
-    _write_table(root, 300)
-    monkeypatch.setattr(enc_mod, "_DISTRIBUTED_SCAN_MIN", 100)
-    serial = scan_sidecars(root)
-    jvm_dist = scan_sidecars(root, spark)
-    monkeypatch.setattr(enc_mod, "jvm_handles_scheme", lambda *a: False)
-    arrow_dist = scan_sidecars(root, spark)
-    assert arrow_dist == jvm_dist == serial
-    assert len(arrow_dist) == 300
-    assert arrow_dist[3]["_verified"] is False  # damage flag preserved
-    assert 77777 not in arrow_dist  # malformed sidecar skipped
+def test_small_tables_stay_serial(spark, clean_table):
+    """Planning a read launches no Spark job, whatever the table size:
+    the prune runs on the driver over the sidecar scan."""
+    from mojap_arrow_pd_parser_spark.operators.decode import _live_pruned_files
 
-
-def test_small_tables_stay_serial(spark, tmp_path, monkeypatch):
-    root = str(tmp_path / "small")
-    _write_table(root, 10)
-    called = {"dist": False}
-    real = enc_mod._scan_sidecars_distributed
-    monkeypatch.setattr(
-        enc_mod, "_scan_sidecars_distributed",
-        lambda *a: called.__setitem__("dist", True) or real(*a),
-    )
-    out = scan_sidecars(root, spark)
-    assert len(out) == 10
-    assert called["dist"] is False  # below threshold -> no Spark job
+    sc = spark.sparkContext
+    sc.setJobGroup("manifest-scan-probe", "prune planning")
+    try:
+        files = _live_pruned_files(
+            spark, clean_table, _PLAN, None, ("val", 100, 259)
+        )
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert len(files) == 16  # chunks 10..25 overlap [100, 259]
+    assert sc.statusTracker().getJobIdsForGroup("manifest-scan-probe") == []
 
 
 class TestDistributedConsolidation:
-    """Round-7 (verdict r6 #4/#5): the consolidated-manifest rebuild
-    and GC deletes run distributed — no per-chunk row on the driver."""
+    """The consolidated manifest (manifest.parquet) rebuilt from the
+    sidecar scan: live view honored, sorted by chunk_id, and no
+    DataFrame collected to build it. (The class name predates the
+    removal of the distributed rebuild.)"""
 
     def _fresh_table(self, tmp_path, n=1500):
         # n > 1000 so the fixture's %1000==999 REPLACE lineage exists
@@ -397,42 +350,32 @@ class TestDistributedConsolidation:
         _write_table(root, n)
         return root
 
-    def test_distributed_consolidation_matches_serial(
-        self, spark, tmp_path, monkeypatch
-    ):
-        from pyspark.sql import functions as F
-
+    def test_distributed_consolidation_matches_serial(self, spark, tmp_path):
         root = self._fresh_table(tmp_path)
         empty = spark.createDataFrame([], enc_mod.MANIFEST_SCHEMA)
-        # serial reference first (threshold above the table size)
-        monkeypatch.setattr(enc_mod, "_DISTRIBUTED_SCAN_MIN", 10**9)
-        serial = enc_mod._finish_encode(spark, empty, root, consolidate=True)
-        serial_rows = sorted(
-            tuple(r) for r in serial.collect()
-        )
-        # distributed path
-        monkeypatch.setattr(enc_mod, "_DISTRIBUTED_SCAN_MIN", 100)
-        dist = enc_mod._finish_encode(spark, empty, root, consolidate=True)
-        dist_rows = sorted(tuple(r) for r in dist.collect())
-        assert dist.columns == serial.columns
-        assert dist_rows == serial_rows
+        cons = enc_mod._finish_encode(spark, empty, root, consolidate=True)
+        rows = cons.collect()
+        ids = {r["chunk_id"] for r in rows}
         # live view honored: chunk 3 (damaged) excluded, replaced
         # chunks retired, malformed sidecars skipped
-        ids = {r[0] for r in dist_rows}
-        assert 3 not in ids and 77777 not in ids
-        assert 998 not in ids and 999 in ids
+        want = set(range(1500)) - {3, 997, 998}
+        assert ids == want and len(rows) == len(want)
+        assert 77777 not in ids and 99999 not in ids
+        by_id = {r["chunk_id"]: r for r in rows}
+        assert by_id[42]["n_rows"] == 142 and by_id[42]["file"] == "chunk-00042.parquet"
         # written file is sorted by chunk_id (deterministic artifact)
         on_disk = spark.read.parquet(f"{root}/manifest.parquet")
         col = [r.chunk_id for r in on_disk.collect()]
-        assert col == sorted(col)
+        assert col == sorted(want)
 
     def test_distributed_consolidation_no_per_chunk_driver_rows(
         self, spark, tmp_path, monkeypatch
     ):
+        """The rebuild takes its rows from the sidecar scan and writes
+        them in one parquet write: no DataFrame is collected."""
         from pyspark.sql.classic.dataframe import DataFrame
 
         root = self._fresh_table(tmp_path)
-        monkeypatch.setattr(enc_mod, "_DISTRIBUTED_SCAN_MIN", 100)
         collected = []
         real = DataFrame.collect
 
@@ -444,10 +387,11 @@ class TestDistributedConsolidation:
         monkeypatch.setattr(DataFrame, "collect", spy)
         empty = spark.createDataFrame([], enc_mod.MANIFEST_SCHEMA)
         enc_mod._finish_encode(spark, empty, root, consolidate=True)
-        # the JVM consolidation path never collects a DataFrame at all
         assert collected == []
 
-    def test_gc_distributed_10k_victims(self, spark, tmp_path, monkeypatch):
+    def test_gc_distributed_10k_victims(self, tmp_path):
+        """GC of ~2,900 victims in one pass (the name predates the
+        removal of the distributed delete fan-out)."""
         import json as _json
         import os as _os
 
@@ -470,16 +414,16 @@ class TestDistributedConsolidation:
         }
         with open(f"{root}/manifest/99999.json", "w") as f:
             f.write(_json.dumps(m))
-        monkeypatch.setattr(enc_mod, "_DISTRIBUTED_SCAN_MIN", 100)
         # _write_clean_table's own %1000==999 merges retire 2 more each
         expected = len(set(victims) | {998, 997, 1998, 1997, 2998, 2997})
-        removed = gc_superseded(root, spark)
+        removed = gc_superseded(root)
         assert removed == expected
         left = {f for f in _os.listdir(f"{root}/chunks")}
         assert f"chunk-{0:05d}.parquet" not in left
         assert fname in left
+        assert len(_os.listdir(f"{root}/manifest")) == n + 1 - expected
         # idempotent re-run deletes nothing further
-        assert gc_superseded(root, spark) == 0
+        assert gc_superseded(root) == 0
 
 
 def test_serial_gc_counts_only_deleted_victims(tmp_path, monkeypatch):
@@ -513,14 +457,59 @@ def test_serial_gc_counts_only_deleted_victims(tmp_path, monkeypatch):
     assert {fname, "chunk-00003.parquet"} <= left
 
 
-class TestVerbsDriverLight:
-    """Round-8 (verdict r7 #2): on a distributed-scale table the verb
-    paths (delete / upsert / compaction / GC / encode resume) answer
-    their manifest questions through DataFrame aggregates and filtered
-    collects — the O(chunks) driver dict (scan_done_chunks) is never
-    materialized."""
+def _add_chunk(root: str, cid: int, replaces: list[int]) -> None:
+    """Write chunk ``cid``'s file and a sidecar that replaces ``replaces``."""
+    fname = f"chunk-{cid:05d}.parquet"
+    with open(f"{root}/chunks/{fname}", "wb") as f:
+        f.write(b"m" * 9)
+    m = {
+        "chunk_id": cid, "n_rows": 1, "n_cols": 1, "in_bytes": 1,
+        "out_bytes": 1, "codecs": "{}", "crc32": "0", "key_min": "a",
+        "key_max": "z", "wall_ms": 1, "status": "ok", "file": fname,
+        "file_bytes": 9, "replaces": replaces,
+    }
+    with open(f"{root}/manifest/{cid:05d}.json", "w") as f:
+        f.write(json.dumps(m))
 
-    N_CHUNKS = 300  # > _DISTRIBUTED_SCAN_MIN
+
+def test_gc_folds_committed_staging_before_deleting(tmp_path):
+    """A victim whose sidecar sits in a committed-but-unfolded staging
+    dir (a crash between an upsert's commit marker and its fold) must
+    not come back: GC folds staging first, so the sidecar it deletes
+    is the one a later fold would otherwise move into manifest/."""
+    from mojap_arrow_pd_parser_spark.operators.decode import _live_pruned_files
+    from mojap_arrow_pd_parser_spark.operators.encode import (
+        _fold_committed_staging, gc_superseded,
+    )
+
+    root = str(tmp_path / "enc")
+    _write_clean_table(root, 4)
+    # 1. chunk 1's sidecar is staged under a commit marker
+    os.makedirs(f"{root}/_staging/g1")
+    os.rename(f"{root}/manifest/00001.json", f"{root}/_staging/g1/00001.json")
+    os.makedirs(f"{root}/_commits")
+    with open(f"{root}/_commits/g1.json", "w") as f:
+        f.write('{"generation": 1}')
+    # 2. chunk 5 replaces [1]; gc; the staging dir is folded
+    _add_chunk(root, 5, [1])
+    assert gc_superseded(root) == 1
+    _fold_committed_staging(root)
+    # 3. chunk 9 replaces [5]; gc
+    _add_chunk(root, 9, [5])
+    assert gc_superseded(root) == 1
+    # 4. chunk 1 stays retired: reads see 0, 2, 3 and 9, no damage
+    files = _live_pruned_files(None, root, _PLAN, None, None)
+    assert sorted(files) == [
+        f"chunk-{c:05d}.parquet" for c in (0, 2, 3, 9)
+    ]
+    assert not os.path.exists(f"{root}/manifest/00001.json")
+
+
+class TestVerbsAtScale:
+    """A 300-chunk table through delete -> upsert -> resume ->
+    compact + gc, every verb on the one manifest path."""
+
+    N_CHUNKS = 300
 
     @pytest.fixture(scope="class")
     def big_table(self, spark, tmp_path_factory):
@@ -528,7 +517,7 @@ class TestVerbsDriverLight:
 
         from mojap_arrow_pd_parser_spark.operators.encode import encode_table
 
-        out = str(tmp_path_factory.mktemp("verbslight") / "enc")
+        out = str(tmp_path_factory.mktemp("verbs300") / "enc")
         src = spark.range(3000).select(
             F.col("id").cast("long").alias("k"),
             (F.col("id") * 2).cast("long").alias("v"),
@@ -536,39 +525,19 @@ class TestVerbsDriverLight:
         encode_table(spark, src, out, key="k", n_chunks=self.N_CHUNKS)
         return out
 
-    def test_verbs_never_materialize_chunk_dict(
-        self, spark, big_table, monkeypatch
-    ):
+    def test_verb_sequence_reads_back_exact(self, spark, big_table):
         from pyspark.sql import functions as F
 
         import mojap_arrow_pd_parser_spark.operators.encode as E
         from mojap_arrow_pd_parser_spark.operators.decode import decode_table
 
-        dict_calls = []
-        real_scan = E.scan_done_chunks
-        monkeypatch.setattr(
-            E, "scan_done_chunks",
-            lambda *a, **k: dict_calls.append("scan_done_chunks")
-            or real_scan(*a, **k),
-        )
-        real_dist = E._scan_sidecars_distributed
-        monkeypatch.setattr(
-            E, "_scan_sidecars_distributed",
-            lambda *a, **k: dict_calls.append("_scan_sidecars_distributed")
-            or real_dist(*a, **k),
-        )
-
         E.delete_rows(spark, big_table, ("k", 10, 20), consolidate=False)
-        assert dict_calls == [], f"delete materialized the dict: {dict_calls}"
-
         batch = spark.range(5).select(
             F.col("id").cast("long").alias("k"),
             F.lit(999).cast("long").alias("v"),
         )
         E.upsert_rows(spark, batch, big_table, generation=1, consolidate=False)
-        assert dict_calls == [], f"upsert materialized the dict: {dict_calls}"
-
-        # resume scan: also dict-free while the table is at scale
+        # resume over the whole source: every bucket is done, no-op
         E.encode_table(
             spark,
             spark.range(3000).select(
@@ -578,18 +547,17 @@ class TestVerbsDriverLight:
             big_table, key="k", n_chunks=self.N_CHUNKS, resume=True,
             consolidate=False,
         )
-        assert dict_calls == [], f"resume materialized the dict: {dict_calls}"
-
         E.compact_chunks(
             spark, big_table, min_rows=50, consolidate=False, gc=True
         )
-        assert dict_calls == [], f"compact/gc materialized the dict: {dict_calls}"
 
-        # and the verbs actually did their jobs
         dec = decode_table(spark, big_table)
-        assert dec.count() == 3000 - 11
-        got = {
-            r["k"]: r["v"]
-            for r in dec.filter(F.col("k") < 5).collect()
-        }
-        assert got == {0: 999, 1: 999, 2: 999, 3: 999, 4: 999}
+        got = {r["k"]: r["v"] for r in dec.collect()}
+        want = {k: 2 * k for k in range(3000) if not 10 <= k <= 20}
+        want.update({k: 999 for k in range(5)})
+        assert len(got) == dec.count() == 3000 - 11
+        assert got == want
+        # compaction folded the small chunks, and gc left no victim
+        live = live_chunks(E.scan_done_chunks(big_table))
+        assert len(live) < self.N_CHUNKS
+        assert set(E.scan_done_chunks(big_table)) == set(live)

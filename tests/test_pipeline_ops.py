@@ -1462,7 +1462,7 @@ class TestEncodeAppend:
         encode_table(spark, a, out, n_chunks=8)
         encode_append(spark, b, out, generation=1)
         compact_chunks(spark, out, min_rows=200, gc=True)
-        gc_superseded(out, spark)
+        gc_superseded(out)
         assert verify_roundtrip(spark, a.unionAll(b), out)["mismatches"] == 0
 
     def test_multi_epoch_stream_loses_nothing(self, spark, tmp_path):

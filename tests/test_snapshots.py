@@ -250,11 +250,11 @@ class TestSnapshots:
 
         out, _a, _b = self._build(spark, tmp_path)
         n_pre = decode_table(spark, out, as_of=2).count()
-        assert gc_superseded(out, spark) == 0  # all superseded chunks retained
+        assert gc_superseded(out) == 0  # all superseded chunks retained
         assert decode_table(spark, out, as_of=2).count() == n_pre
         expired = snaps.expire_snapshots(out, keep_last=1)
         assert expired == [1, 2]
-        assert gc_superseded(out, spark) > 0
+        assert gc_superseded(out) > 0
         live = decode_table(spark, out)
         assert live.filter("n_tok between 0 and 60").count() == 0
         with pytest.raises(ValueError, match="not found"):
@@ -466,20 +466,11 @@ class TestTableStats:
 
 
 class TestDistributedPaths:
-    """Force the distributed sidecar-scan branch (threshold monkeypatch)
-    and re-verify snapshot + stats + key_in semantics agree with the
-    serial branch."""
+    """Snapshot + stats + key_in semantics on a tracked table after a
+    delete. (These once forced a distributed sidecar-scan branch; the
+    same assertions now run on the one manifest path.)"""
 
-    @pytest.fixture()
-    def low_threshold(self, monkeypatch):
-        from mojap_arrow_pd_parser_spark.operators import encode
-
-        monkeypatch.setattr(encode, "_DISTRIBUTED_SCAN_MIN", 1)
-        yield
-
-    def test_snapshot_write_and_read_distributed(
-        self, spark, tmp_path, low_threshold
-    ):
+    def test_snapshot_write_and_read_distributed(self, spark, tmp_path):
         from mojap_arrow_pd_parser_spark.operators import snapshots as snaps
         from mojap_arrow_pd_parser_spark.operators.decode import decode_table
         from mojap_arrow_pd_parser_spark.operators.encode import (
@@ -495,7 +486,7 @@ class TestDistributedPaths:
         assert [m["version"] for m in snaps.list_snapshots(out)] == [1, 2]
         assert decode_table(spark, out, as_of=1).count() == 400
 
-    def test_stats_and_key_in_distributed(self, spark, tmp_path, low_threshold):
+    def test_stats_and_key_in_distributed(self, spark, tmp_path):
         from mojap_arrow_pd_parser_spark.operators.decode import (
             decode_table, table_stats,
         )
@@ -578,17 +569,22 @@ class TestNullAccounting:
         assert got.columns == ["doc_id"]
         assert got.count() == 200
 
-    def test_serial_and_distributed_stats_agree(
-        self, spark, tmp_path, monkeypatch
-    ):
-        from mojap_arrow_pd_parser_spark.operators import encode
-        from mojap_arrow_pd_parser_spark.operators.decode import table_stats
+    def test_serial_and_distributed_stats_agree(self, spark, tmp_path):
+        """Stats of an evolved table match its decoded rows, with or
+        without a session."""
+        from mojap_arrow_pd_parser_spark.operators.decode import (
+            decode_table, table_stats,
+        )
 
         out = self._evolved(spark, tmp_path)
-        serial = table_stats(None, out, columns=["quality"])
-        monkeypatch.setattr(encode, "_DISTRIBUTED_SCAN_MIN", 1)
-        dist = table_stats(spark, out, columns=["quality"])
-        assert serial == dist
+        st = table_stats(spark, out, columns=["quality"])
+        assert st == table_stats(None, out, columns=["quality"])
+        row = decode_table(spark, out).agg(
+            F.min("quality"), F.max("quality"), F.count("*")
+        ).collect()[0]
+        q = st["columns"]["quality"]
+        assert (q["min"], q["max"]) == (row[0], row[1])
+        assert st["n_rows"] == row[2] == 600
 
     def test_datasource_is_null_pushdown(self, spark, tmp_path):
         from mojap_arrow_pd_parser_spark.sources import datasource
@@ -656,7 +652,7 @@ class TestSnapshotTags:
         snaps.tag(out, "prod", 1)
         expired = snaps.expire_snapshots(out, keep_last=1)
         assert expired == [2]  # v1 pinned by the tag, v3 kept by count
-        gc_superseded(out, spark)
+        gc_superseded(out)
         assert decode_table(spark, out, as_of="prod").count() == 300
         snaps.untag(out, "prod")
         assert snaps.expire_snapshots(out, keep_last=1) == [1]

@@ -182,7 +182,7 @@ class TestRewriteClustered:
         src = _tbl(spark, 600)
         encode_table(spark, src, out, key="doc_id", n_chunks=6)
         rewrite_clustered(spark, out, ["n_tok"], n_chunks=6, gc=True)
-        assert gc_superseded(out, spark) == 0  # gc=True already ran
+        assert gc_superseded(out) == 0  # gc=True already ran
         assert verify_roundtrip(spark, src, out)["mismatches"] == 0
 
     def test_recluster_is_cdc_invisible(self, spark, tmp_path):
