@@ -24,9 +24,9 @@ sidecar scan every read uses (`encode.scan_done_chunks`) and committed
 as one parquet put; the marker is O(1). GC's retention check reads
 the retained snapshots' chunk ids on the driver (:func:`referenced_ids`).
 Reference parity: the reference library has no versioning (it
-reads/writes whole files, /root/reference/arrow_pd_parser/_readers.py);
-this generalizes its "what you wrote is what you read back" contract
-across table history.
+reads/writes whole files, ``arrow_pd_parser/_readers.py``); this
+generalizes its "what you wrote is what you read back" contract across
+table history.
 """
 
 from __future__ import annotations
