@@ -645,12 +645,6 @@ def _row_digest(df: DataFrame, cols: list[str]) -> DataFrame:
     )
 
 
-def _row_digest_agg(df: DataFrame, cols: list[str]):
-    """Collected form of :func:`_row_digest` (kept for callers that
-    digest one side only)."""
-    return _row_digest(df, cols).collect()[0]
-
-
 def verify_roundtrip(
     spark: SparkSession,
     original: DataFrame,

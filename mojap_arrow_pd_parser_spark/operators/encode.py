@@ -11,7 +11,9 @@ per-row Python):
          via the codec kernels (auto-selected per column-chunk),
          write one parquet chunk file atomically, emit sidecar + one
          manifest row                                          (N12)
-      -> manifest DataFrame (tiny) consolidated at out_dir/manifest.parquet
+      -> driver: one sidecar scan, consolidated into
+         out_dir/manifest.parquet with one atomic put (no Spark job;
+         the verb returns it as an in-memory DataFrame)
 
 The chunk file commit is write-tmp+rename on local filesystems and a
 single atomic put on object stores (see sources/fsio.py — all file
@@ -78,12 +80,12 @@ def jvm_handles_scheme(spark: SparkSession, path: str) -> bool:
     works against an object store even on a Spark build without the
     S3A connector.
 
-    The probe uses the EXACT uri callers will hand to spark.read /
-    the JVM manifest write — no s3->s3a rewriting. hadoop-aws
-    registers only the ``s3a`` scheme, so an ``s3://`` path must fail
-    the probe (and take the pyarrow fallback) even on a build WITH
-    hadoop-aws; rewriting before probing would pass the probe and
-    then crash the real read with 'No FileSystem for scheme: s3'."""
+    The probe uses the EXACT uri callers will hand to spark.read — no
+    s3->s3a rewriting. hadoop-aws registers only the ``s3a`` scheme,
+    so an ``s3://`` path must fail the probe (and take the pyarrow
+    fallback) even on a build WITH hadoop-aws; rewriting before
+    probing would pass the probe and then crash the real read with 'No
+    FileSystem for scheme: s3'."""
     if "://" not in path or path.startswith("file://"):
         return True
     try:
@@ -256,26 +258,31 @@ def encode_chunk_table(table: pa.Table, chunk_id: int, key: str) -> tuple[pa.Tab
     return enc, manifest
 
 
+#: MANIFEST_SCHEMA as an Arrow schema (task output rows and the
+#: driver-committed manifest.parquet)
+_MANIFEST_ARROW_SCHEMA = pa.schema(
+    [
+        ("chunk_id", pa.int32()),
+        ("n_rows", pa.int64()),
+        ("n_cols", pa.int32()),
+        ("in_bytes", pa.int64()),
+        ("out_bytes", pa.int64()),
+        ("codecs", pa.string()),
+        ("crc32", pa.string()),
+        ("key_min", pa.string()),
+        ("key_max", pa.string()),
+        ("wall_ms", pa.int64()),
+        ("file", pa.string()),
+        ("status", pa.string()),
+    ]
+)
+
+
 def _manifest_batch(m: dict) -> pa.Table:
-    return pa.Table.from_pylist(
-        [m],
-        schema=pa.schema(
-            [
-                ("chunk_id", pa.int32()),
-                ("n_rows", pa.int64()),
-                ("n_cols", pa.int32()),
-                ("in_bytes", pa.int64()),
-                ("out_bytes", pa.int64()),
-                ("codecs", pa.string()),
-                ("crc32", pa.string()),
-                ("key_min", pa.string()),
-                ("key_max", pa.string()),
-                ("wall_ms", pa.int64()),
-                ("file", pa.string()),
-                ("status", pa.string()),
-            ]
-        ),
-    )
+    """One task output row from a sidecar dict; the sidecar-only fields
+    (file_bytes, replaces, col_stats, col_nulls, key_bloom) are not in
+    the schema and drop out."""
+    return pa.Table.from_pylist([m], schema=_MANIFEST_ARROW_SCHEMA)
 
 
 def _visible_staging_dirs(out_dir: str, pending_ok: str | None = None) -> list[str]:
@@ -495,8 +502,8 @@ def encode_table(
     """Encode ``df`` into ``out_dir`` (chunks/ + manifest/); returns manifest DF.
 
     Resumable: rerunning after a kill skips every bucket whose sidecar
-    verifies (N13). The returned DataFrame reads the consolidated
-    manifest (covers prior runs too).
+    verifies (N13). The returned DataFrame is the consolidated
+    manifest (covers prior runs too), held in the driver.
 
     ``partition_col`` switches to partition-salted chunking: hot
     partition values (e.g. a 70%% ``source``) are split across salts
@@ -514,8 +521,9 @@ def encode_table(
     instead of ``manifest/`` — invisible to every reader until the
     transaction's single commit-marker write (see :func:`upsert_rows`);
     the resume scan passes the token through so a same-token rerun
-    still skips its durable chunks. Consolidation is deferred to the
-    transaction commit.
+    still skips its durable chunks. With ``pending`` the return value
+    is the staged encode itself, NOT yet run: the transaction runs it
+    in its own single action, then commits and consolidates once.
 
     ``track_snapshots`` opts the TABLE into versioned snapshots
     (persisted into plan.json, so appends/deletes/upserts/compactions
@@ -601,20 +609,16 @@ def encode_table(
             fsio.write_json_atomic(
                 fsio.join(manifest_dir, f"{int(chunk_id):05d}.json"), manifest
             )
-            manifest.pop("file_bytes")
-            manifest.pop("col_stats", None)
-            manifest.pop("key_bloom", None)
-            manifest.pop("col_nulls", None)
             yield _manifest_batch(manifest).to_batches()[0]
 
     mdf = _bucketed_shuffle(bdf, int(plan["n_chunks"]), chunk_base).mapInArrow(
         encode_partition, schema=MANIFEST_SCHEMA
     )
     if pending:
-        # mid-transaction: materialize the staged encode, but defer
-        # consolidation to the commit (staged sidecars are invisible)
-        mdf.count()
-        return spark.createDataFrame([], MANIFEST_SCHEMA)
+        # mid-transaction: the transaction runs this staged encode in
+        # its own single action and commits once (staged sidecars are
+        # invisible until then)
+        return mdf
     return _finish_encode(spark, mdf, out_dir, consolidate,
                           verb="append" if chunk_base else "encode")
 
@@ -762,9 +766,18 @@ def _done_ids_in_range(
 
 
 def _finish_encode(spark, mdf, out_dir, consolidate, verb: str = "commit"):
-    # Materialize (runs the encode); the job's own rows land nowhere —
-    # the sidecars written inside the tasks are the source of truth.
-    mdf.count()
+    """Commit a verb's metadata from the driver; returns the
+    consolidated manifest as an in-memory DataFrame.
+
+    ``mdf`` is the verb's data work, run here by one count (its rows
+    land nowhere: the sidecars written inside the tasks are the source
+    of truth), or None when the verb has no data work left to run."""
+    if mdf is not None:
+        mdf.count()
+    # ONE scan of ALL LIVE verified sidecars (this run + survivors of
+    # killed runs, minus compaction-superseded chunks), projected to
+    # the manifest fields: col_stats / blooms stay in the sidecars.
+    live = live_chunks(scan_done_chunks(out_dir, columns=_MANIFEST_FIELDS))
     # Snapshot-tracking tables persist each committed verb's live view
     # as an immutable version (operators/snapshots.py) — BEFORE any GC
     # the caller runs, so retention always sees the newest snapshot.
@@ -778,53 +791,37 @@ def _finish_encode(spark, mdf, out_dir, consolidate, verb: str = "commit"):
     if plan.get("snapshots"):
         from .snapshots import write_snapshot
 
-        write_snapshot(spark, out_dir, verb)
-    # Consolidate ALL LIVE verified sidecars (this run + survivors of
-    # killed runs, minus compaction-superseded chunks) into one
-    # queryable manifest table, sorted by chunk_id. The scan projects
-    # to the manifest fields: per-chunk col_stats payloads stay in the
-    # sidecars.
-    done = live_chunks(scan_done_chunks(out_dir, columns=_MANIFEST_FIELDS))
-    rows = []
-    for _cid, m in sorted(done.items()):
-        m = dict(m)
-        m.pop("file_bytes", None)
-        m.pop("replaces", None)  # compaction lineage stays sidecar-only
-        m.pop("col_stats", None)  # column zone map stays sidecar-only
-        m.pop("key_bloom", None)  # bloom filter stays sidecar-only
-        m.pop("col_nulls", None)
-        rows.append(m)
-    cons = spark.createDataFrame(rows, schema=MANIFEST_SCHEMA) if rows else None
-    if cons is None:
-        return mdf.limit(0)
-    if consolidate:
-        if not jvm_handles_scheme(spark, out_dir):
-            # object store without a JVM connector: the consolidated
-            # manifest is tiny (one row per chunk) — commit it from
-            # the driver with one atomic put and return the in-memory
-            # view (spark.read can't reach the scheme either).
-            # Write-then-clean: commit the new consolidated part under
-            # a unique name FIRST, then delete stale parts (an earlier
-            # JVM-path write left part-00000-<uuid>.parquet names, and
-            # a glob reader must never see duplicate manifest rows).
-            # A crash between the put and the cleanup leaves duplicates
-            # a re-run's cleanup removes — never an empty manifest.
-            mp_dir = fsio.join(out_dir, "manifest.parquet")
-            part_name = f"part-00000-{uuid.uuid4().hex}.parquet"
-            fsio.write_parquet_atomic(
-                pa.concat_tables([_manifest_batch(m) for m in rows]),
-                fsio.join(mp_dir, part_name),
-            )
-            for name, _sz in fsio.list_files(mp_dir):
-                if name != part_name and not name.startswith(("_", ".")):
-                    fs, p = fsio.resolve(fsio.join(mp_dir, name))
-                    fs.delete_file(p)
-            return cons
-        cons.coalesce(1).write.mode("overwrite").parquet(
-            fsio.join(out_dir, "manifest.parquet")
-        )
-        return spark.read.parquet(fsio.join(out_dir, "manifest.parquet"))
-    return cons
+        write_snapshot(spark, out_dir, verb, live)
+    cons = pa.Table.from_pylist(
+        [m for _cid, m in sorted(live.items())], schema=_MANIFEST_ARROW_SCHEMA
+    )
+    if consolidate and cons.num_rows:
+        # the consolidated manifest is tiny (one row per chunk): commit
+        # it from the driver with one atomic put, on every scheme.
+        # Write-then-clean: commit the new part under a unique name
+        # FIRST, then delete stale parts (a glob reader must never see
+        # duplicate manifest rows). A crash between the put and the
+        # cleanup leaves duplicates a re-run's cleanup removes — never
+        # an empty or missing manifest.
+        mp_dir = fsio.join(out_dir, "manifest.parquet")
+        fsio.makedirs(mp_dir)
+        part_name = f"part-00000-{uuid.uuid4().hex}.parquet"
+        fsio.write_parquet_atomic(cons, fsio.join(mp_dir, part_name))
+        for name, _sz in fsio.list_files(mp_dir):
+            if name != part_name and not name.startswith(("_", ".")):
+                fs, p = fsio.resolve(fsio.join(mp_dir, name))
+                fs.delete_file(p)
+    return spark.createDataFrame(cons)
+
+
+def _work_df(spark: SparkSession, work: list[tuple], col: str = "spec") -> DataFrame:
+    """A verb's (chunk_id, ``col``) work list as a DataFrame built from
+    an Arrow table: Spark plans it as a LocalRelation held in the
+    driver, so no job parallelizes it from Python rows."""
+    ids, vals = zip(*work)
+    return spark.createDataFrame(
+        pa.table({"chunk_id": pa.array(ids, pa.int32()), col: list(vals)})
+    )
 
 
 def encode_files(
@@ -902,19 +899,12 @@ def encode_files(
                 fsio.write_json_atomic(
                     fsio.join(manifest_dir, f"{chunk_id:05d}.json"), manifest
                 )
-                manifest.pop("file_bytes")
-                manifest.pop("col_stats", None)
-                manifest.pop("key_bloom", None)
-                manifest.pop("col_nulls", None)
                 yield _manifest_batch(manifest).to_batches()[0]
 
+    mdf = None
     if todo:
-        fdf = spark.createDataFrame(
-            [(i, f) for i, f in todo], "chunk_id int, path string"
-        ).repartition(len(todo))
+        fdf = _work_df(spark, todo, "path").repartition(len(todo))
         mdf = fdf.mapInArrow(encode_file, schema=MANIFEST_SCHEMA)
-    else:
-        mdf = spark.createDataFrame([], MANIFEST_SCHEMA)
     return _finish_encode(spark, mdf, out_dir, consolidate, verb="encode_files")
 
 
@@ -971,10 +961,7 @@ def compact_chunks(
         groups.append(cur)
     groups = [g for g in groups if len(g) > 1]
     if not groups:
-        return _finish_encode(
-            spark, spark.createDataFrame([], MANIFEST_SCHEMA), out_dir,
-            consolidate, verb="compact",
-        )
+        return _finish_encode(spark, None, out_dir, consolidate, verb="compact")
 
     next_id = _next_rewrite_id(done)
     plan_key = fsio.read_json(fsio.join(out_dir, "plan.json")).get("key", "doc_id")
@@ -1022,14 +1009,9 @@ def compact_chunks(
                 fsio.write_json_atomic(
                     fsio.join(manifest_dir, f"{new_id:05d}.json"), manifest
                 )
-                manifest.pop("file_bytes")
-                manifest.pop("col_stats", None)
-                manifest.pop("key_bloom", None)
-                manifest.pop("col_nulls", None)
-                manifest.pop("replaces")
                 yield _manifest_batch(manifest).to_batches()[0]
 
-    wdf = spark.createDataFrame(work, "chunk_id int, spec string").repartition(len(work))
+    wdf = _work_df(spark, work).repartition(len(work))
     mdf = wdf.mapInArrow(merge_group, schema=MANIFEST_SCHEMA)
     result = _finish_encode(spark, mdf, out_dir, consolidate, verb="compact")
     if gc:
@@ -1089,10 +1071,7 @@ def delete_rows(
         for i, fn in enumerate(sorted(files))
     ]
     if not work:
-        return _finish_encode(
-            spark, spark.createDataFrame([], MANIFEST_SCHEMA), out_dir,
-            consolidate, verb="delete",
-        )
+        return _finish_encode(spark, None, out_dir, consolidate, verb="delete")
 
     def rewrite_chunk(batches):
         import pyarrow.compute as pc
@@ -1153,14 +1132,9 @@ def delete_rows(
                 fsio.write_json_atomic(
                     fsio.join(manifest_dir, f"{new_id:05d}.json"), manifest
                 )
-                manifest.pop("file_bytes")
-                manifest.pop("col_stats", None)
-                manifest.pop("key_bloom", None)
-                manifest.pop("col_nulls", None)
-                manifest.pop("replaces")
                 yield _manifest_batch(manifest).to_batches()[0]
 
-    wdf = spark.createDataFrame(work, "chunk_id int, spec string").repartition(
+    wdf = _work_df(spark, work).repartition(
         min(len(work), spark.sparkContext.defaultParallelism)
     )
     mdf = wdf.mapInArrow(rewrite_chunk, schema=MANIFEST_SCHEMA)
@@ -1251,7 +1225,9 @@ def upsert_rows(
 ) -> DataFrame:
     """MERGE by plan key (the last lakehouse verb): every row of ``df``
     whose key already exists REPLACES the stored row; new keys insert.
-    Two phases, both resumable under the same ``generation``:
+    Two parts, staged by ONE Spark action (a count over the union of
+    their independent subtrees, whose stages overlap) and both
+    resumable under the same ``generation``:
 
     1. **Rewrite**: each chunk's drop-key list is assembled
        DISTRIBUTED in the key column's NATIVE type (never via string
@@ -1275,11 +1251,12 @@ def upsert_rows(
        Tasks then decode -> anti-filter (native-typed ``is_in``) ->
        re-encode with ``replaces=[old]`` sidecars, ids from the rewrite
        zone. Chunks whose candidate keys turn out absent are skipped.
-    2. **Insert**: :func:`encode_append` of the whole batch under
-       ``generation``.
+    2. **Insert**: the staged encode of the whole batch under
+       ``generation`` (:func:`encode_append` with ``pending``, which
+       returns the encode without running it).
 
-    The two phases form ONE atomic snapshot: every sidecar both phases
-    write is STAGED under ``_staging/g<generation>/`` (invisible to all
+    The two parts form ONE atomic snapshot: every sidecar either part
+    writes is STAGED under ``_staging/g<generation>/`` (invisible to all
     readers), and one commit-marker write (``_commits/g<generation>.
     json``) flips the whole transaction visible at once — a reader at
     any point observes either the pre-upsert table or the fully-merged
@@ -1318,7 +1295,7 @@ def upsert_rows(
         )
     # a RETRY of this generation must not rewrite its own prior
     # insert chunks (append-resume would then skip re-inserting them):
-    # exclude the generation's bucket range from phase-1 candidates.
+    # exclude the generation's bucket range from rewrite candidates.
     gen_lo = int(generation) * GENERATION_STRIDE
     gen_hi = gen_lo + int(plan["n_chunks"])
     done = scan_done_chunks(out_dir, columns=("key_min", "key_max"))
@@ -1326,22 +1303,25 @@ def upsert_rows(
         cid: m for cid, m in live_chunks(done).items()
         if not (gen_lo <= cid < gen_hi)
     }
-    live_idx = None
-    if live:
-        base = _next_rewrite_id(done)
-        live_idx = spark.createDataFrame(
-            [
-                (int(cid), m["file"], m.get("key_min", ""),
-                 m.get("key_max", ""), int(base + i))
-                for i, (cid, m) in enumerate(sorted(live.items()))
-            ],
-            "chunk_id long, file string, key_min string, key_max string, "
-            "new_id long",
-        )
     chunks_dir = fsio.join(out_dir, "chunks")
     manifest_dir = fsio.join(out_dir, "_staging", token)
     fsio.makedirs(manifest_dir)
-    if live_idx is not None:
+    # the staged insert encode, not run yet
+    staged = encode_append(
+        spark, df, out_dir, generation, consolidate=False, pending=token
+    )
+    if live:
+        # an Arrow-built index is a LocalRelation: broadcasting it to
+        # the candidate joins runs no job
+        base = _next_rewrite_id(done)
+        ids = sorted(live)
+        live_idx = spark.createDataFrame(pa.table({
+            "chunk_id": pa.array(ids, pa.int64()),
+            "file": [live[c]["file"] for c in ids],
+            "key_min": [live[c].get("key_min", "") for c in ids],
+            "key_max": [live[c].get("key_max", "") for c in ids],
+            "new_id": pa.array(range(base, base + len(ids)), pa.int64()),
+        }))
         pairs = _upsert_candidate_pairs(spark, df, key, key_type, plan, live_idx)
         specs = pairs.groupBy("old_id", "new_id", "file").agg(
             F.collect_list("_k").alias("drop_keys")
@@ -1394,31 +1374,20 @@ def upsert_rows(
                     fsio.write_json_atomic(
                         fsio.join(manifest_dir, f"{new_id:05d}.json"), manifest
                     )
-                    manifest.pop("file_bytes")
-                    manifest.pop("col_stats", None)
-                    manifest.pop("key_bloom", None)
-                    manifest.pop("col_nulls", None)
-                    manifest.pop("replaces")
                     yield _manifest_batch(manifest).to_batches()[0]
 
-        n_spec = specs.count()
-        if n_spec:
-            mdf = specs.repartition(
-                min(n_spec, spark.sparkContext.defaultParallelism)
-            ).mapInArrow(rewrite, schema=MANIFEST_SCHEMA)
-            mdf.count()  # materialize the staged rewrites
-
-    encode_append(
-        spark, df, out_dir, generation, consolidate=False, pending=token
-    )
+        # at most one spec per live chunk
+        staged = specs.repartition(
+            min(len(live), spark.sparkContext.defaultParallelism)
+        ).mapInArrow(rewrite, schema=MANIFEST_SCHEMA).unionByName(staged)
+    # ONE action stages rewrites and inserts: the two subtrees are
+    # independent, so their stages overlap
+    staged.count()
     # COMMIT: one atomic marker write flips rewrites + inserts visible
     fsio.makedirs(fsio.join(out_dir, "_commits"))
     fsio.write_json_atomic(commit_path, {"generation": int(generation)})
     _fold_committed_staging(out_dir)
-    result = _finish_encode(
-        spark, spark.createDataFrame([], MANIFEST_SCHEMA), out_dir,
-        consolidate, verb="upsert",
-    )
+    result = _finish_encode(spark, None, out_dir, consolidate, verb="upsert")
     if gc:
         gc_superseded(out_dir)
     return result
@@ -1520,10 +1489,6 @@ def rewrite_clustered(
             fsio.write_json_atomic(
                 fsio.join(staging_dir, f"{int(chunk_id):05d}.json"), manifest
             )
-            manifest.pop("file_bytes")
-            manifest.pop("col_stats", None)
-            manifest.pop("key_bloom", None)
-            manifest.pop("col_nulls", None)
             yield _manifest_batch(manifest).to_batches()[0]
 
     (
@@ -1558,8 +1523,7 @@ def rewrite_clustered(
     )
     _fold_committed_staging(out_dir)
     result = _finish_encode(
-        spark, spark.createDataFrame([], MANIFEST_SCHEMA), out_dir,
-        consolidate, verb="rewrite_clustered",
+        spark, None, out_dir, consolidate, verb="rewrite_clustered"
     )
     if gc:
         gc_superseded(out_dir)

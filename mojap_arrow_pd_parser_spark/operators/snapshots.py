@@ -19,9 +19,9 @@ keep the round-6 behavior exactly — GC frees superseded chunks
 immediately and there is no per-commit snapshot write.
 
 Scale shape: a snapshot is one row per live chunk (id, file, n_rows —
-a few MB at ~10^5-10^6 chunks), built on the driver from the same
-sidecar scan every read uses (`encode.scan_done_chunks`) and committed
-as one parquet put; the marker is O(1). GC's retention check reads
+a few MB at ~10^5-10^6 chunks), built on the driver from the sidecar
+scan the verb's commit already makes (`encode._finish_encode`) and
+committed as one parquet put; the marker is O(1). GC's retention check reads
 the retained snapshots' chunk ids on the driver (:func:`referenced_ids`).
 Reference parity: the reference library has no versioning (it
 reads/writes whole files, ``arrow_pd_parser/_readers.py``); this
@@ -104,18 +104,19 @@ def _next_version(out_dir: str) -> int:
     return top + 1
 
 
-def write_snapshot(spark: SparkSession | None, out_dir: str, verb: str) -> int:
-    """Persist the current LIVE VERIFIED chunk membership as the next
-    snapshot version; returns the version. Data-then-marker: the
-    parquet is fully durable before the marker commit, so a crash
+def write_snapshot(
+    spark: SparkSession | None, out_dir: str, verb: str, live: dict[int, dict]
+) -> int:
+    """Persist ``live``, the current LIVE VERIFIED chunk membership
+    (``encode.live_chunks`` over a sidecar scan that carries
+    ``n_rows``; the verb commit passes the scan it already made), as
+    the next snapshot version; returns the version. Data-then-marker:
+    the parquet is fully durable before the marker commit, so a crash
     leaves an ignored orphan dir, never a half-readable snapshot.
     ``spark`` is accepted but unused."""
-    from .encode import live_chunks, scan_done_chunks
-
     version = _next_version(out_dir)
     data_dir = _data_dir(out_dir, version)
     fsio.makedirs(data_dir)
-    live = live_chunks(scan_done_chunks(out_dir, columns=("n_rows",)))
     rows = [
         {"chunk_id": int(cid), "file": m["file"], "n_rows": int(m["n_rows"])}
         for cid, m in sorted(live.items())

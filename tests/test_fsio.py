@@ -230,8 +230,8 @@ class TestS3WritePath:
         # decode via the distributed pyarrow fallback (no hadoop-aws jars)
         assert decode_table(spark, out).count() == 400
         assert verify_roundtrip(spark, src, out)["mismatches"] == 0
-        # consolidated manifest committed driver-side (JVM can't write
-        # s3); write-then-clean leaves exactly ONE uniquely-named part
+        # consolidated manifest committed driver-side, as on every
+        # scheme; write-then-clean leaves exactly ONE uniquely-named part
         parts = [
             n for n, _sz in fsio.list_files(f"{out}/manifest.parquet")
             if not n.startswith(("_", "."))

@@ -561,3 +561,99 @@ class TestVerbsAtScale:
         live = live_chunks(E.scan_done_chunks(big_table))
         assert len(live) < self.N_CHUNKS
         assert set(E.scan_done_chunks(big_table)) == set(live)
+
+
+#: eleven rows of ``tokens_table``, all in the first chunk
+_DOCS_10_20 = ("doc_id", "doc_000000000010", "doc_000000000020")
+
+
+class TestDriverManifestCommit:
+    """Every verb commits ``manifest.parquet`` from the driver with one
+    write-then-clean put on local fs too: a verb with no data work runs
+    no Spark job, the directory always holds exactly one data part
+    equal to the live view, and a failed put leaves the previous part
+    readable."""
+
+    @pytest.fixture
+    def table(self, spark, tmp_path):
+        from mojap_arrow_pd_parser_spark.datagen import tokens_table
+        from mojap_arrow_pd_parser_spark.operators.encode import encode_table
+
+        out = str(tmp_path / "enc")
+        encode_table(spark, tokens_table(spark, 300, seed=31), out,
+                     key="doc_id", n_chunks=4, track_snapshots=True)
+        return out
+
+    @staticmethod
+    def _parts(out):
+        mp = f"{out}/manifest.parquet"
+        return sorted(n for n in os.listdir(mp) if not n.startswith(("_", ".")))
+
+    @staticmethod
+    def _manifest_rows(out):
+        import pyarrow.parquet as pq
+
+        (part,) = TestDriverManifestCommit._parts(out)
+        t = pq.read_table(f"{out}/manifest.parquet/{part}")
+        return list(zip(t["chunk_id"].to_pylist(), t["n_rows"].to_pylist()))
+
+    @staticmethod
+    def _live_rows(out):
+        live = live_chunks(enc_mod.scan_done_chunks(out))
+        return [(cid, m["n_rows"]) for cid, m in sorted(live.items())]
+
+    def test_no_op_verbs_launch_no_spark_job(self, spark, table):
+        from mojap_arrow_pd_parser_spark.operators.snapshots import (
+            list_snapshots, read_snapshot_arrow,
+        )
+
+        before = self._manifest_rows(table)
+        n_snaps = len(list_snapshots(table))
+        sc = spark.sparkContext
+        sc.setJobGroup("verb-commit-probe", "no-op verbs")
+        try:
+            enc_mod.compact_chunks(spark, table, min_rows=0)
+            # past every key: the zone map prunes every chunk
+            enc_mod.delete_rows(spark, table, ("doc_id", "zzz0", "zzz9"))
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        assert sc.statusTracker().getJobIdsForGroup("verb-commit-probe") == []
+        # both verbs still committed: manifest and snapshots re-written
+        # from the one scan each verb made
+        assert self._manifest_rows(table) == before == self._live_rows(table)
+        snaps = list_snapshots(table)
+        assert [s["verb"] for s in snaps[n_snaps:]] == ["compact", "delete"]
+        last = read_snapshot_arrow(table, snaps[-1]["version"])
+        assert list(zip(last["chunk_id"].to_pylist(),
+                        last["n_rows"].to_pylist())) == before
+
+    def test_consecutive_verbs_leave_one_part_equal_to_live(self, spark, table):
+        first = self._parts(table)
+        enc_mod.delete_rows(spark, table, _DOCS_10_20)
+        second = self._parts(table)
+        enc_mod.compact_chunks(spark, table, min_rows=10_000)
+        third = self._parts(table)
+        assert len(first) == len(second) == len(third) == 1
+        assert len({*first, *second, *third}) == 3  # a fresh part each time
+        assert self._manifest_rows(table) == self._live_rows(table)
+        assert len(self._live_rows(table)) == 1  # compaction merged all
+
+    def test_failed_put_keeps_previous_part(self, spark, table, monkeypatch):
+        from mojap_arrow_pd_parser_spark.sources import fsio
+
+        old_parts, old_rows = self._parts(table), self._manifest_rows(table)
+        real_put = fsio.write_parquet_atomic
+
+        def failing_put(t, path, *a, **kw):
+            if "manifest.parquet" in path:
+                raise OSError("simulated failed manifest put")
+            return real_put(t, path, *a, **kw)
+
+        monkeypatch.setattr(fsio, "write_parquet_atomic", failing_put)
+        with pytest.raises(OSError, match="simulated failed manifest put"):
+            enc_mod.delete_rows(spark, table, _DOCS_10_20)
+        monkeypatch.undo()
+        # the delete's chunks committed, but the previous manifest part
+        # is still there, readable, with its old rows
+        assert self._parts(table) == old_parts
+        assert self._manifest_rows(table) == old_rows != self._live_rows(table)

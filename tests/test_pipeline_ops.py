@@ -1971,6 +1971,19 @@ class TestUpsertSnapshot:
         )
         return src, batch, out
 
+    @staticmethod
+    def _staged(out):
+        """(rewrite, insert) sidecar counts staged under generation 1."""
+        from mojap_arrow_pd_parser_spark.operators.encode import GENERATION_STRIDE
+        from mojap_arrow_pd_parser_spark.sources import fsio
+        staged = [fsio.read_json(f) for f in glob.glob(f"{out}/_staging/g1/*.json")]
+        rewrites = sum(1 for m in staged if m.get("replaces"))
+        inserts = sum(
+            1 for m in staged
+            if not m.get("replaces") and m["chunk_id"] >= GENERATION_STRIDE
+        )
+        return rewrites, inserts
+
     def test_reader_between_phases_sees_old_snapshot(
         self, spark, tmp_path, monkeypatch
     ):
@@ -1978,19 +1991,13 @@ class TestUpsertSnapshot:
         src, batch, out = self._setup(spark, tmp_path)
         before = self._digest(spark, out)
         seen = {}
-        real_append = em.encode_append
-
-        def spy_append(*a, **kw):
-            # reader BETWEEN phase 1 (rewrites staged) and phase 2
-            seen["mid"] = self._digest(spark, out)
-            return real_append(*a, **kw)
-
-        monkeypatch.setattr(em, "encode_append", spy_append)
-        # also observe between phase 2 and the commit-marker write
+        # observe at the commit-marker write: both rewrites and inserts
+        # are staged by then (one action runs them together)
         real_write = em.fsio.write_json_atomic
 
         def spy_write(path, obj):
             if "_commits/" in path and "precommit" not in seen:
+                seen["staged"] = self._staged(out)
                 seen["precommit"] = self._digest(spark, out)
             return real_write(path, obj)
 
@@ -2004,9 +2011,10 @@ class TestUpsertSnapshot:
              .select("doc_id", "n_tok").collect()]
             + [(r.doc_id, r.n_tok) for r in batch.select("doc_id", "n_tok").collect()]
         )
-        assert seen["mid"] == before        # rewrites staged, invisible
-        assert seen["precommit"] == before  # inserts staged, invisible
-        assert after == want                # one flip at the commit
+        rewrites, inserts = seen["staged"]
+        assert rewrites > 0 and inserts > 0  # everything staged...
+        assert seen["precommit"] == before   # ...and invisible
+        assert after == want                 # one flip at the commit
 
     def test_crash_before_commit_leaves_old_snapshot_then_retry_converges(
         self, spark, tmp_path, monkeypatch
@@ -2015,16 +2023,21 @@ class TestUpsertSnapshot:
         from mojap_arrow_pd_parser_spark.operators.decode import verify_roundtrip
         src, batch, out = self._setup(spark, tmp_path)
         before = self._digest(spark, out)
-        real_append = em.encode_append
+        seen = {}
+        real_write = em.fsio.write_json_atomic
 
-        def crash_append(*a, **kw):
-            real_append(*a, **kw)  # phase 2 fully staged...
-            raise RuntimeError("simulated crash before commit")
+        def crash_write(path, obj):
+            if "_commits/" in path:
+                seen["staged"] = self._staged(out)
+                raise RuntimeError("simulated crash before commit")
+            return real_write(path, obj)
 
-        monkeypatch.setattr(em, "encode_append", crash_append)
+        monkeypatch.setattr(em.fsio, "write_json_atomic", crash_write)
         with pytest.raises(RuntimeError, match="simulated crash"):
             em.upsert_rows(spark, batch, out, generation=1)
         monkeypatch.undo()
+        rewrites, inserts = seen["staged"]
+        assert rewrites > 0 and inserts > 0  # crashed with everything staged
         # uncommitted: reader still sees the OLD table exactly
         assert self._digest(spark, out) == before
         # retry converges to the merged table
