@@ -150,29 +150,7 @@ def decode_table(
     else:
         # no sidecars (foreign writer) -> fall back to the directory
         paths = None
-    from .encode import jvm_handles_scheme
-
-    if jvm_handles_scheme(spark, out_dir):
-        enc = (
-            spark.read.parquet(*paths)
-            if paths is not None
-            else spark.read.parquet(fsio.join(out_dir, "chunks"))
-        )
-        enc = enc.filter(F.col("column").isin(names)).select(
-            "chunk_id", "column", "meta", "payload", "crc32"
-        )
-    else:
-        # object store without a JVM connector (e.g. s3:// and no
-        # hadoop-aws): distributed pyarrow read — executors open their
-        # chunk files directly, same scaling shape as the JVM scan
-        if paths is None:
-            paths = [
-                fsio.join(out_dir, "chunks", f)
-                for f, _sz in fsio.list_files(fsio.join(out_dir, "chunks"))
-                if f.endswith(".parquet")
-            ]
-        enc = _read_enc_rows_arrow(spark, paths, names)
-
+    enc = _read_enc_rows(spark, out_dir, paths, names)
     decoded = decode_rows_df(enc, out_schema, verify_checksums)
     have = [f.name for f in out_schema.fields]
     if key_range is not None and key in have:
@@ -209,10 +187,34 @@ def _norm_wheres(where) -> list[tuple]:
 
 
 #: projection of a chunk file the decode consumes (codec/n_rows/...
-#: byte-accounting columns pruned at the parquet read on both paths)
+#: byte-accounting columns pruned at the parquet read on every path)
+_ENC_ROWS_COLS = ["chunk_id", "column", "meta", "payload", "crc32"]
 _ENC_ROWS_SCHEMA = (
     "chunk_id int, column string, meta string, payload binary, crc32 string"
 )
+
+
+def _read_enc_rows(
+    spark: SparkSession, out_dir: str, paths: list[str] | None, names: list[str]
+) -> DataFrame:
+    """Encoded rows of the chunk files ``paths`` (None: every file under
+    ``chunks/``), restricted to the ``names`` columns. A JVM parquet
+    scan when the JVM resolves the scheme; otherwise (an object store
+    without a JVM connector, e.g. s3:// and no hadoop-aws) distributed
+    pyarrow reads with the same scaling shape."""
+    from .encode import jvm_handles_scheme
+
+    chunks_dir = fsio.join(out_dir, "chunks")
+    if jvm_handles_scheme(spark, out_dir):
+        enc = spark.read.parquet(*(paths if paths is not None else [chunks_dir]))
+        return enc.filter(F.col("column").isin(names)).select(*_ENC_ROWS_COLS)
+    if paths is None:
+        paths = [
+            fsio.join(chunks_dir, f)
+            for f, _sz in fsio.list_files(chunks_dir)
+            if f.endswith(".parquet")
+        ]
+    return _read_enc_rows_arrow(spark, paths, names)
 
 
 def _read_enc_rows_arrow(
@@ -248,7 +250,7 @@ def _read_enc_rows_arrow(
                 t = _pq.read_table(
                     p,
                     filesystem=fs,
-                    columns=["chunk_id", "column", "meta", "payload", "crc32"],
+                    columns=_ENC_ROWS_COLS,
                     filters=[("column", "in", sel)],
                 )
                 yield from t.cast(target).to_batches()
@@ -492,43 +494,80 @@ def _col_stats_overlap(m: dict, where: tuple) -> bool:
     return True  # mixed types: never prune on a cross-type compare
 
 
+def arrow_columns(schema: StructType) -> tuple[list[str], dict]:
+    """(column names, {name: arrow type}) of a table schema: the shape
+    :func:`decode_chunk` reads every chunk as."""
+    from pyspark.sql.pandas.types import to_arrow_type
+
+    return (
+        [f.name for f in schema.fields],
+        {f.name: to_arrow_type(f.dataType) for f in schema.fields},
+    )
+
+
+def decode_chunk(
+    enc_rows: pa.Table,
+    names: list[str],
+    arrow_types: dict,
+    verify_checksums: bool = True,
+) -> pa.Table:
+    """One chunk's encoded rows -> its decoded table with exactly the
+    ``names`` columns, in that order. Every path reads chunks through
+    this one function: decode_table / decode_files, the DataSource
+    scans and the copy-on-write rewrites (compaction, DELETE, MERGE).
+
+    Each column payload's CRC32 is checked before it is decoded
+    (``IOError`` on a mismatch). Columns the chunk lacks — it was
+    written before an additive schema evolution — read as typed nulls
+    of ``arrow_types[name]`` (the Iceberg add-column semantics), so
+    every chunk of a table yields the same schema. Encoded rows of
+    columns outside ``names`` are skipped."""
+    from ..functions.codecs import decode_array
+
+    wanted = set(names)
+    by_col = {}
+    metas = enc_rows.column("meta").to_pylist()
+    crcs = enc_rows.column("crc32").to_pylist()
+    cols = enc_rows.column("column").to_pylist()
+    payloads = enc_rows.column("payload")
+    for i, name in enumerate(cols):
+        if name not in wanted:
+            continue
+        payload = payloads[i].as_py()
+        if verify_checksums and f"{zlib.crc32(payload):08x}" != crcs[i]:
+            raise IOError(
+                f"checksum mismatch decoding column {name!r} "
+                f"(chunk {enc_rows.column('chunk_id')[0].as_py()})"
+            )
+        by_col[name] = decode_array(json.loads(metas[i]), payload)
+    n_rows = len(next(iter(by_col.values()))) if by_col else 0
+    arrays = [
+        by_col[n] if n in by_col else pa.nulls(n_rows, type=arrow_types[n])
+        for n in names
+    ]
+    return pa.Table.from_arrays(arrays, names=names)
+
+
+def decode_chunk_file(
+    path: str, names: list[str], arrow_types: dict, verify_checksums: bool
+) -> pa.Table:
+    """:func:`decode_chunk` over one chunk file, opened through
+    ``pyarrow.fs`` (any scheme): the executor-side reader of the
+    DataSource scans and the rewrite verbs."""
+    import pyarrow.parquet as _pq
+
+    fs, p = fsio.resolve(path)
+    enc_rows = _pq.read_table(p, filesystem=fs, columns=_ENC_ROWS_COLS)
+    return decode_chunk(enc_rows, names, arrow_types, verify_checksums)
+
+
 def decode_rows_df(
     enc: DataFrame, out_schema: StructType, verify_checksums: bool = True
 ) -> DataFrame:
     """Core decode: encoded-rows DataFrame -> decoded rows via one
-    mapInArrow pass (shared by batch decode_table and stream_decode).
-
-    Chunks written BEFORE an additive schema evolution lack the added
-    columns; those decode as typed nulls (the Iceberg add-column read
-    semantics) — the arrow type comes from the table schema, so every
-    chunk yields identical batch schemas."""
-    from pyspark.sql.pandas.types import to_arrow_type
-
-    arrow_schema_names = [f.name for f in out_schema.fields]
-    arrow_types = {f.name: to_arrow_type(f.dataType) for f in out_schema.fields}
-
-    def decode_chunk(table: pa.Table) -> pa.Table:
-        from ..functions.codecs import decode_array
-
-        by_col = {}
-        metas = table.column("meta").to_pylist()
-        crcs = table.column("crc32").to_pylist()
-        cols = table.column("column").to_pylist()
-        payloads = table.column("payload")
-        for i, name in enumerate(cols):
-            payload = payloads[i].as_py()
-            if verify_checksums and f"{zlib.crc32(payload):08x}" != crcs[i]:
-                raise IOError(
-                    f"checksum mismatch decoding column {name!r} "
-                    f"(chunk {table.column('chunk_id')[0].as_py()})"
-                )
-            by_col[name] = decode_array(json.loads(metas[i]), payload)
-        n_rows = len(next(iter(by_col.values()))) if by_col else 0
-        arrays = [
-            by_col[n] if n in by_col else pa.nulls(n_rows, type=arrow_types[n])
-            for n in arrow_schema_names
-        ]
-        return pa.Table.from_arrays(arrays, names=arrow_schema_names)
+    mapInArrow pass (shared by batch decode_table and stream_decode),
+    one :func:`decode_chunk` per chunk."""
+    names, arrow_types = arrow_columns(out_schema)
 
     def decode_partition(batches):
         """Chunk files are single row groups, so batches arrive
@@ -537,7 +576,9 @@ def decode_rows_df(
         from .regroup import iter_contiguous_groups
 
         for _cid, table in iter_contiguous_groups(batches, "chunk_id"):
-            yield from decode_chunk(table).to_batches()
+            yield from decode_chunk(
+                table, names, arrow_types, verify_checksums
+            ).to_batches()
 
     return enc.mapInArrow(decode_partition, schema=out_schema)
 
@@ -562,16 +603,7 @@ def decode_files(
     if not files:
         return spark.createDataFrame([], out_schema)
     paths = [fsio.join(out_dir, "chunks", f) for f in files]
-    from .encode import jvm_handles_scheme
-
-    if jvm_handles_scheme(spark, out_dir):
-        enc = (
-            spark.read.parquet(*paths)
-            .filter(F.col("column").isin(names))
-            .select("chunk_id", "column", "meta", "payload", "crc32")
-        )
-    else:
-        enc = _read_enc_rows_arrow(spark, paths, names)
+    enc = _read_enc_rows(spark, out_dir, paths, names)
     return decode_rows_df(enc, out_schema, verify_checksums)
 
 

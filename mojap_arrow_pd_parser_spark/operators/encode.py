@@ -258,6 +258,36 @@ def encode_chunk_table(table: pa.Table, chunk_id: int, key: str) -> tuple[pa.Tab
     return enc, manifest
 
 
+def write_chunk(
+    table: pa.Table,
+    chunk_id: int,
+    key: str,
+    chunks_dir: str,
+    sidecar_dir: str,
+    replaces: list[int] | None = None,
+) -> dict:
+    """Encode ``table`` as chunk ``chunk_id`` and commit it; returns the
+    sidecar (manifest dict). The one chunk writer every verb uses.
+
+    File-then-metadata: the chunk file is durable (one atomic put)
+    BEFORE its sidecar exists, so a killed task never leaves a sidecar
+    pointing at a missing or partial chunk. ``replaces`` lists the
+    chunk ids the sidecar retires: its commit is the atomic REPLACE of
+    a copy-on-write rewrite (see :func:`live_chunks`)."""
+    enc, manifest = encode_chunk_table(table, chunk_id, key)
+    fname = f"chunk-{chunk_id:05d}.parquet"
+    manifest["file"] = fname
+    if replaces is not None:
+        manifest["replaces"] = [int(r) for r in replaces]
+    manifest["file_bytes"] = fsio.write_parquet_atomic(
+        enc, fsio.join(chunks_dir, fname)
+    )
+    fsio.write_json_atomic(
+        fsio.join(sidecar_dir, f"{chunk_id:05d}.json"), manifest
+    )
+    return manifest
+
+
 #: MANIFEST_SCHEMA as an Arrow schema (task output rows and the
 #: driver-committed manifest.parquet)
 _MANIFEST_ARROW_SCHEMA = pa.schema(
@@ -484,6 +514,45 @@ def _bucketed_shuffle(bdf: DataFrame, n_buckets: int, chunk_base: int = 0) -> Da
     return bdf.repartition(n_buckets, "_bucket").sortWithinPartitions("_bucket")
 
 
+def _encode_buckets(
+    bdf: DataFrame,
+    n_buckets: int,
+    chunk_base: int,
+    key: str,
+    chunks_dir: str,
+    sidecar_dir: str,
+) -> DataFrame:
+    """The bucketed encode, not yet run: one shuffle on ``_bucket``,
+    then one mapInArrow task per bucket that commits its chunk with
+    :func:`write_chunk`, sidecar into ``sidecar_dir``. Returns the
+    manifest rows."""
+
+    def encode_partition(batches):
+        """mapInArrow task body: batches arrive bucket-contiguous (the
+        probe repartition places exactly one bucket per partition; the
+        large-plan fallback sorts within partitions instead), so each
+        chunk is assembled, encoded and committed as soon as its last
+        batch streams in — peak working set ~1 chunk, not the
+        partition. iter_contiguous_groups raises loudly if the
+        contiguity contract is ever broken.
+
+        mapInArrow is used instead of groupBy().applyInArrow because
+        the latter materializes each group whole through the grouped
+        Arrow path; here the group boundary is under our control."""
+        from .regroup import iter_contiguous_groups
+
+        for chunk_id, part in iter_contiguous_groups(batches, "_bucket"):
+            manifest = write_chunk(
+                part.drop_columns(["_bucket"]), int(chunk_id), key,
+                chunks_dir, sidecar_dir,
+            )
+            yield _manifest_batch(manifest).to_batches()[0]
+
+    return _bucketed_shuffle(bdf, n_buckets, chunk_base).mapInArrow(
+        encode_partition, schema=MANIFEST_SCHEMA
+    )
+
+
 def encode_table(
     spark: SparkSession,
     df: DataFrame,
@@ -580,39 +649,9 @@ def encode_table(
         if done:
             bdf = bdf.filter(~F.col("_bucket").isin(done))
 
-    chunks_dir = fsio.join(out_dir, "chunks")
-    manifest_dir = sidecar_dir
-
-    def encode_partition(batches):
-        """mapInArrow task body: batches arrive bucket-contiguous (the
-        probe repartition places exactly one bucket per partition; the
-        large-plan fallback sorts within partitions instead), so each
-        chunk is assembled, encoded and committed as soon as its last
-        batch streams in — peak working set ~1 chunk, not the
-        partition. iter_contiguous_groups raises loudly if the
-        contiguity contract is ever broken.
-
-        mapInArrow is used instead of groupBy().applyInArrow because
-        the latter materializes each group whole through the grouped
-        Arrow path; here the group boundary is under our control."""
-        from .regroup import iter_contiguous_groups
-
-        for chunk_id, part in iter_contiguous_groups(batches, "_bucket"):
-            part = part.drop_columns(["_bucket"])
-            enc, manifest = encode_chunk_table(part, int(chunk_id), key)
-            fname = f"chunk-{int(chunk_id):05d}.parquet"
-            # file-then-metadata: chunk durable BEFORE its sidecar exists
-            manifest["file"] = fname
-            manifest["file_bytes"] = fsio.write_parquet_atomic(
-                enc, fsio.join(chunks_dir, fname)
-            )
-            fsio.write_json_atomic(
-                fsio.join(manifest_dir, f"{int(chunk_id):05d}.json"), manifest
-            )
-            yield _manifest_batch(manifest).to_batches()[0]
-
-    mdf = _bucketed_shuffle(bdf, int(plan["n_chunks"]), chunk_base).mapInArrow(
-        encode_partition, schema=MANIFEST_SCHEMA
+    mdf = _encode_buckets(
+        bdf, n_buckets, chunk_base, key, fsio.join(out_dir, "chunks"),
+        sidecar_dir,
     )
     if pending:
         # mid-transaction: the transaction runs this staged encode in
@@ -814,13 +853,13 @@ def _finish_encode(spark, mdf, out_dir, consolidate, verb: str = "commit"):
     return spark.createDataFrame(cons)
 
 
-def _work_df(spark: SparkSession, work: list[tuple], col: str = "spec") -> DataFrame:
-    """A verb's (chunk_id, ``col``) work list as a DataFrame built from
-    an Arrow table: Spark plans it as a LocalRelation held in the
-    driver, so no job parallelizes it from Python rows."""
-    ids, vals = zip(*work)
+def _work_df(spark: SparkSession, chunk_ids, **cols) -> DataFrame:
+    """A verb's work list — one row per output ``chunk_id`` plus the
+    ``cols`` lists — as a DataFrame built from an Arrow table: Spark
+    plans it as a LocalRelation held in the driver, so no job
+    parallelizes it from Python rows."""
     return spark.createDataFrame(
-        pa.table({"chunk_id": pa.array(ids, pa.int32()), col: list(vals)})
+        pa.table({"chunk_id": pa.array(chunk_ids, pa.int32()), **cols})
     )
 
 
@@ -887,25 +926,71 @@ def encode_files(
 
         for b in batches:
             for row in b.to_pylist():
-                chunk_id, path = int(row["chunk_id"]), row["path"]
-                src_fs, src_path = fsio.resolve(path)
-                table = _pq.read_table(src_path, filesystem=src_fs)
-                enc, manifest = encode_chunk_table(table, chunk_id, key)
-                fname = f"chunk-{chunk_id:05d}.parquet"
-                manifest["file"] = fname
-                manifest["file_bytes"] = fsio.write_parquet_atomic(
-                    enc, fsio.join(chunks_dir, fname)
-                )
-                fsio.write_json_atomic(
-                    fsio.join(manifest_dir, f"{chunk_id:05d}.json"), manifest
+                src_fs, src_path = fsio.resolve(row["path"])
+                manifest = write_chunk(
+                    _pq.read_table(src_path, filesystem=src_fs),
+                    int(row["chunk_id"]), key, chunks_dir, manifest_dir,
                 )
                 yield _manifest_batch(manifest).to_batches()[0]
 
     mdf = None
     if todo:
-        fdf = _work_df(spark, todo, "path").repartition(len(todo))
+        ids, files = zip(*todo)
+        fdf = _work_df(spark, ids, path=list(files)).repartition(len(todo))
         mdf = fdf.mapInArrow(encode_file, schema=MANIFEST_SCHEMA)
     return _finish_encode(spark, mdf, out_dir, consolidate, verb="encode_files")
+
+
+def _rewrite_chunks(
+    wdf: DataFrame, out_dir: str, sidecar_dir: str, plan: dict, transform
+) -> DataFrame:
+    """The copy-on-write rewrite shared by compaction, DELETE and MERGE,
+    not yet run. Each row of ``wdf`` names the new ``chunk_id``, the
+    chunk ids it retires (``members``) and their ``files``. Its task
+    reads the members exactly as a reader does — checksums verified,
+    columns added by schema evolution read as nulls (decode_chunk) —
+    then ``transform(tables, row)`` gives the new chunk's rows, which
+    commit with :func:`write_chunk` (``replaces=members``). A transform
+    returning None leaves the members untouched. Returns the manifest
+    rows."""
+    from pyspark.sql.types import StructType
+
+    from .decode import arrow_columns, decode_chunk_file
+
+    names, arrow_types = arrow_columns(
+        StructType.fromJson(json.loads(plan["schema_json"]))
+    )
+    key = plan.get("key", "doc_id")
+    chunks_dir = fsio.join(out_dir, "chunks")
+
+    def rewrite(batches):
+        for b in batches:
+            for row in b.to_pylist():
+                tables = [
+                    decode_chunk_file(
+                        fsio.join(chunks_dir, f), names, arrow_types, True
+                    )
+                    for f in row["files"]
+                ]
+                table = transform(tables, row)
+                if table is None:
+                    continue
+                manifest = write_chunk(
+                    table, int(row["chunk_id"]), key, chunks_dir,
+                    sidecar_dir, replaces=row["members"],
+                )
+                yield _manifest_batch(manifest).to_batches()[0]
+
+    return wdf.mapInArrow(rewrite, schema=MANIFEST_SCHEMA)
+
+
+def _kept_rows(table: pa.Table, matched) -> pa.Table | None:
+    """``table`` without the ``matched`` rows (a NULL match keeps the
+    row), or None when nothing matched: the chunk stays untouched."""
+    import pyarrow.compute as pc
+
+    kept = table.filter(pc.invert(pc.fill_null(matched, False)))
+    return None if kept.num_rows == table.num_rows else kept
 
 
 def compact_chunks(
@@ -937,9 +1022,13 @@ def compact_chunks(
     work is distributed: one task per group decodes its member chunks
     with the codec kernels and re-encodes one merged chunk — the same
     mapInArrow shape as encode_files.
-    """
-    from ..functions.codecs import decode_array  # noqa: F401 (worker import check)
 
+    Members are read exactly as a reader reads them: each column
+    payload's checksum is verified (a corrupted chunk fails the verb
+    with ``IOError`` and nothing commits for its group), and columns
+    added by schema evolution read as nulls in chunks written before
+    them, so the merged chunk carries the table's full schema.
+    """
     # grouping needs only the LIVE chunks under min_rows (plus their
     # n_rows/file)
     done = scan_done_chunks(out_dir, columns=("n_rows",))
@@ -964,55 +1053,15 @@ def compact_chunks(
         return _finish_encode(spark, None, out_dir, consolidate, verb="compact")
 
     next_id = _next_rewrite_id(done)
-    plan_key = fsio.read_json(fsio.join(out_dir, "plan.json")).get("key", "doc_id")
-    chunks_dir = fsio.join(out_dir, "chunks")
-    manifest_dir = fsio.join(out_dir, "manifest")
-    work = [
-        (next_id + gi, json.dumps({
-            "members": g,
-            "files": [small_meta[c]["file"] for c in g],
-        }))
-        for gi, g in enumerate(groups)
-    ]
-
-    def merge_group(batches):
-        import pyarrow.parquet as _pq
-
-        from ..functions.codecs import decode_array as _dec
-
-        for b in batches:
-            for row in b.to_pylist():
-                new_id = int(row["chunk_id"])
-                spec = json.loads(row["spec"])
-                tables = []
-                for fname in spec["files"]:
-                    fs, p = fsio.resolve(fsio.join(chunks_dir, fname))
-                    enc_t = _pq.read_table(p, filesystem=fs)
-                    cols = {}
-                    for i in range(enc_t.num_rows):
-                        name = enc_t.column("column")[i].as_py()
-                        meta = json.loads(enc_t.column("meta")[i].as_py())
-                        payload = enc_t.column("payload")[i].as_py()
-                        cols[name] = _dec(meta, payload)
-                    tables.append(pa.Table.from_arrays(
-                        list(cols.values()), names=list(cols.keys())
-                    ))
-                merged = pa.concat_tables(tables).combine_chunks()
-                enc, manifest = encode_chunk_table(merged, new_id, plan_key)
-                fname = f"chunk-{new_id:05d}.parquet"
-                manifest["file"] = fname
-                manifest["replaces"] = spec["members"]
-                manifest["file_bytes"] = fsio.write_parquet_atomic(
-                    enc, fsio.join(chunks_dir, fname)
-                )
-                # sidecar commit = the atomic REPLACE of all members
-                fsio.write_json_atomic(
-                    fsio.join(manifest_dir, f"{new_id:05d}.json"), manifest
-                )
-                yield _manifest_batch(manifest).to_batches()[0]
-
-    wdf = _work_df(spark, work).repartition(len(work))
-    mdf = wdf.mapInArrow(merge_group, schema=MANIFEST_SCHEMA)
+    wdf = _work_df(
+        spark, range(next_id, next_id + len(groups)),
+        members=groups, files=[[small_meta[c]["file"] for c in g] for g in groups],
+    ).repartition(len(groups))
+    mdf = _rewrite_chunks(
+        wdf, out_dir, fsio.join(out_dir, "manifest"),
+        fsio.read_json(fsio.join(out_dir, "plan.json")),
+        lambda tables, _row: pa.concat_tables(tables),
+    )
     result = _finish_encode(spark, mdf, out_dir, consolidate, verb="compact")
     if gc:
         gc_superseded(out_dir)
@@ -1047,6 +1096,11 @@ def delete_rows(
     are skipped (no pointless rewrite); fully-deleted chunks rewrite
     to a 0-row chunk (compact_chunks folds those away later).
 
+    Candidates are read exactly as a reader reads them: checksums are
+    verified (a corrupted candidate fails the verb with ``IOError``
+    and its chunk stays live), and a predicate column added by schema
+    evolution reads as NULL in older chunks, so they never match.
+
     Returns the new-chunk manifest DF. ``gc=True`` also deletes the
     superseded files afterwards.
     """
@@ -1059,85 +1113,43 @@ def delete_rows(
     files = _live_pruned_files(spark, out_dir, plan, None, wheres)
     if files is None:
         raise IOError(f"{out_dir} has no usable sidecars; cannot delete")
-    plan_key = plan.get("key", "doc_id")
-    chunks_dir = fsio.join(out_dir, "chunks")
-    manifest_dir = fsio.join(out_dir, "manifest")
+    if not files:
+        return _finish_encode(spark, None, out_dir, consolidate, verb="delete")
     done = scan_done_chunks(out_dir, columns=())
     next_id = _next_rewrite_id(done) if done else 0
-    work = [
-        (next_id + i, json.dumps({
-            "member": int(fn.split("-")[1].split(".")[0]), "file": fn,
-        }))
-        for i, fn in enumerate(sorted(files))
-    ]
-    if not work:
-        return _finish_encode(spark, None, out_dir, consolidate, verb="delete")
+    files = sorted(files)
 
-    def rewrite_chunk(batches):
+    def drop_matching(tables, _row):
         import pyarrow.compute as pc
-        import pyarrow.parquet as _pq
 
-        from ..functions.codecs import decode_array as _dec
+        table = tables[0]
+        matched = None
+        for c, lo, hi in wheres:
+            target = table.column(c)
+            lo_s, hi_s = pa.scalar(lo), pa.scalar(hi)
+            if lo_s.type != target.type:
+                # mistyped bounds (e.g. CLI strings vs int column): cast
+                # rather than crash; incompatible casts raise loudly,
+                # never silently mis-delete
+                lo_s = lo_s.cast(target.type)
+                hi_s = hi_s.cast(target.type)
+            m = pc.and_kleene(
+                pc.greater_equal(target, lo_s), pc.less_equal(target, hi_s)
+            )
+            matched = m if matched is None else pc.and_kleene(matched, m)
+        # NULL never matches the BETWEEN -> row survives; a chunk the
+        # prune kept (or one written before the predicate column
+        # existed, all NULL for it) that nothing matches is untouched
+        return _kept_rows(table, matched)
 
-        for b in batches:
-            for row in b.to_pylist():
-                new_id = int(row["chunk_id"])
-                spec = json.loads(row["spec"])
-                fs, p = fsio.resolve(fsio.join(chunks_dir, spec["file"]))
-                enc_t = _pq.read_table(p, filesystem=fs)
-                cols = {}
-                for i in range(enc_t.num_rows):
-                    name = enc_t.column("column")[i].as_py()
-                    meta = json.loads(enc_t.column("meta")[i].as_py())
-                    cols[name] = _dec(meta, enc_t.column("payload")[i].as_py())
-                table = pa.Table.from_arrays(
-                    list(cols.values()), names=list(cols.keys())
-                )
-                if any(c not in cols for c, _lo, _hi in wheres):
-                    # pre-evolution chunk: a predicate column was added
-                    # later, every row reads as NULL for it, NULL never
-                    # matches a BETWEEN, and the conjunction therefore
-                    # matches nothing — chunk untouched (the zone-map
-                    # prune conservatively kept it)
-                    continue
-                matched = None
-                for c, lo, hi in wheres:
-                    target = table.column(c)
-                    lo_s, hi_s = pa.scalar(lo), pa.scalar(hi)
-                    if lo_s.type != target.type:
-                        # mistyped bounds (e.g. CLI strings vs int
-                        # column): cast rather than crash; incompatible
-                        # casts raise loudly, never silently mis-delete
-                        lo_s = lo_s.cast(target.type)
-                        hi_s = hi_s.cast(target.type)
-                    m = pc.and_kleene(
-                        pc.greater_equal(target, lo_s),
-                        pc.less_equal(target, hi_s),
-                    )
-                    matched = m if matched is None else pc.and_kleene(matched, m)
-                # NULL col never matches the BETWEEN -> row survives
-                keep = pc.fill_null(pc.invert(matched), True)
-                kept = table.filter(keep)
-                if kept.num_rows == table.num_rows:
-                    continue  # prune overshot; chunk untouched
-                enc, manifest = encode_chunk_table(
-                    kept.combine_chunks(), new_id, plan_key
-                )
-                fname = f"chunk-{new_id:05d}.parquet"
-                manifest["file"] = fname
-                manifest["replaces"] = [spec["member"]]
-                manifest["file_bytes"] = fsio.write_parquet_atomic(
-                    enc, fsio.join(chunks_dir, fname)
-                )
-                fsio.write_json_atomic(
-                    fsio.join(manifest_dir, f"{new_id:05d}.json"), manifest
-                )
-                yield _manifest_batch(manifest).to_batches()[0]
-
-    wdf = _work_df(spark, work).repartition(
-        min(len(work), spark.sparkContext.defaultParallelism)
+    wdf = _work_df(
+        spark, range(next_id, next_id + len(files)),
+        members=[[int(fn.split("-")[1].split(".")[0])] for fn in files],
+        files=[[fn] for fn in files],
+    ).repartition(min(len(files), spark.sparkContext.defaultParallelism))
+    mdf = _rewrite_chunks(
+        wdf, out_dir, fsio.join(out_dir, "manifest"), plan, drop_matching
     )
-    mdf = wdf.mapInArrow(rewrite_chunk, schema=MANIFEST_SCHEMA)
     result = _finish_encode(spark, mdf, out_dir, consolidate, verb="delete")
     if gc:
         gc_superseded(out_dir)
@@ -1251,6 +1263,10 @@ def upsert_rows(
        Tasks then decode -> anti-filter (native-typed ``is_in``) ->
        re-encode with ``replaces=[old]`` sidecars, ids from the rewrite
        zone. Chunks whose candidate keys turn out absent are skipped.
+       Candidates are read exactly as a reader reads them: checksums
+       are verified (a corrupted candidate fails the verb with
+       ``IOError`` before the commit marker, so nothing becomes
+       visible), and columns added by schema evolution read as nulls.
     2. **Insert**: the staged encode of the whole batch under
        ``generation`` (:func:`encode_append` with ``pending``, which
        returns the encode without running it).
@@ -1271,8 +1287,6 @@ def upsert_rows(
     rewrites nothing (the keys are already gone) and append-resumes to
     a no-op. Batch keys must be unique within ``df``.
     """
-    import pyarrow.parquet as _pq  # noqa: F401 (worker import check)
-
     token = f"g{int(generation)}"
     commit_path = fsio.join(out_dir, "_commits", f"{token}.json")
     committed = fsio.exists(commit_path)
@@ -1303,9 +1317,8 @@ def upsert_rows(
         cid: m for cid, m in live_chunks(done).items()
         if not (gen_lo <= cid < gen_hi)
     }
-    chunks_dir = fsio.join(out_dir, "chunks")
-    manifest_dir = fsio.join(out_dir, "_staging", token)
-    fsio.makedirs(manifest_dir)
+    staging_dir = fsio.join(out_dir, "_staging", token)
+    fsio.makedirs(staging_dir)
     # the staged insert encode, not run yet
     staged = encode_append(
         spark, df, out_dir, generation, consolidate=False, pending=token
@@ -1325,61 +1338,35 @@ def upsert_rows(
         pairs = _upsert_candidate_pairs(spark, df, key, key_type, plan, live_idx)
         specs = pairs.groupBy("old_id", "new_id", "file").agg(
             F.collect_list("_k").alias("drop_keys")
+        ).select(
+            F.col("new_id").alias("chunk_id"),
+            F.array("old_id").alias("members"),
+            F.array("file").alias("files"),
+            "drop_keys",
         )
 
-        def rewrite(batches):
+        def drop_keys(tables, row):
             import pyarrow.compute as pc
-            import pyarrow.parquet as pq_
 
-            from ..functions.codecs import decode_array as _dec
-
-            for b in batches:
-                for row in b.to_pylist():
-                    fs, p = fsio.resolve(fsio.join(chunks_dir, row["file"]))
-                    enc_t = pq_.read_table(p, filesystem=fs)
-                    cols = {}
-                    for i in range(enc_t.num_rows):
-                        name = enc_t.column("column")[i].as_py()
-                        meta = json.loads(enc_t.column("meta")[i].as_py())
-                        cols[name] = _dec(meta, enc_t.column("payload")[i].as_py())
-                    table = pa.Table.from_arrays(
-                        list(cols.values()), names=list(cols.keys())
-                    )
-                    target = table.column(key)
-                    if isinstance(target, pa.ChunkedArray):
-                        target = target.combine_chunks()
-                    # NATIVE-typed key match: the drop keys arrive in
-                    # the key column's own Arrow type (never through a
-                    # string rendering, whose Spark and Arrow forms
-                    # disagree for double '1.0'/'1' and timestamp
-                    # second/microsecond precision)
-                    vs = pa.array(row["drop_keys"])
-                    if vs.type != target.type:
-                        vs = vs.cast(target.type)
-                    matched = pc.is_in(target, value_set=vs)
-                    keep = pc.invert(pc.fill_null(matched, False))
-                    kept = table.filter(keep)
-                    if kept.num_rows == table.num_rows:
-                        continue  # candidate keys absent; chunk untouched
-                    new_id = int(row["new_id"])
-                    enc, manifest = encode_chunk_table(
-                        kept.combine_chunks(), new_id, key
-                    )
-                    fname = f"chunk-{new_id:05d}.parquet"
-                    manifest["file"] = fname
-                    manifest["replaces"] = [int(row["old_id"])]
-                    manifest["file_bytes"] = fsio.write_parquet_atomic(
-                        enc, fsio.join(chunks_dir, fname)
-                    )
-                    fsio.write_json_atomic(
-                        fsio.join(manifest_dir, f"{new_id:05d}.json"), manifest
-                    )
-                    yield _manifest_batch(manifest).to_batches()[0]
+            table = tables[0]
+            target = table.column(key)
+            # NATIVE-typed key match: the drop keys arrive in the key
+            # column's own Arrow type (never through a string rendering,
+            # whose Spark and Arrow forms disagree for double '1.0'/'1'
+            # and timestamp second/microsecond precision)
+            vs = pa.array(row["drop_keys"])
+            if vs.type != target.type:
+                vs = vs.cast(target.type)
+            # candidate keys absent -> None: chunk untouched
+            return _kept_rows(table, pc.is_in(target, value_set=vs))
 
         # at most one spec per live chunk
-        staged = specs.repartition(
-            min(len(live), spark.sparkContext.defaultParallelism)
-        ).mapInArrow(rewrite, schema=MANIFEST_SCHEMA).unionByName(staged)
+        staged = _rewrite_chunks(
+            specs.repartition(
+                min(len(live), spark.sparkContext.defaultParallelism)
+            ),
+            out_dir, staging_dir, plan, drop_keys,
+        ).unionByName(staged)
     # ONE action stages rewrites and inserts: the two subtrees are
     # independent, so their stages overlap
     staged.count()
@@ -1467,35 +1454,13 @@ def rewrite_clustered(
     token = f"zorder{base}"
     staging_dir = fsio.join(out_dir, "_staging", token)
     fsio.makedirs(staging_dir)
-    chunks_dir = fsio.join(out_dir, "chunks")
-
-    from ..plans.chunking import assign_buckets
-
     bdf = assign_buckets(df, zplan).withColumn(
         "_bucket", (F.col("_bucket") + F.lit(int(base))).cast("int")
     )
-
-    def encode_partition(batches):
-        from .regroup import iter_contiguous_groups
-
-        for chunk_id, part in iter_contiguous_groups(batches, "_bucket"):
-            part = part.drop_columns(["_bucket"])
-            enc, manifest = encode_chunk_table(part, int(chunk_id), key)
-            fname = f"chunk-{int(chunk_id):05d}.parquet"
-            manifest["file"] = fname
-            manifest["file_bytes"] = fsio.write_parquet_atomic(
-                enc, fsio.join(chunks_dir, fname)
-            )
-            fsio.write_json_atomic(
-                fsio.join(staging_dir, f"{int(chunk_id):05d}.json"), manifest
-            )
-            yield _manifest_batch(manifest).to_batches()[0]
-
-    (
-        _bucketed_shuffle(bdf, int(zplan["n_chunks"]), int(base))
-        .mapInArrow(encode_partition, schema=MANIFEST_SCHEMA)
-        .count()  # materialize the staged encode
-    )
+    _encode_buckets(
+        bdf, int(zplan["n_chunks"]), int(base), key,
+        fsio.join(out_dir, "chunks"), staging_dir,
+    ).count()  # materialize the staged encode
 
     # distribute the old-chunk retirement across the staged sidecars
     staged = sorted(

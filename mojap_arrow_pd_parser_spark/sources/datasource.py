@@ -19,7 +19,7 @@ metadata pruning wired into Catalyst's filter pushdown:
   ``option("as_of", v)`` time-travels via the snapshot layer.
 - **Batch write** (:class:`EncodedTableWriter`): the shuffle-free
   file-aligned encode shape (one task partition -> one chunk via
-  ``encode_chunk_table``), commit protocol = data + sidecars first,
+  ``write_chunk``), commit protocol = data + sidecars first,
   ``plan.json`` last on the driver (readers recognize the table only
   once the plan commits; task retries overwrite their own chunk id —
   write-once-per-identity idempotence).
@@ -101,44 +101,17 @@ class _ChunkPartition(InputPartition):
         self.file = file
 
 
-def _decode_chunk_file(
-    out_dir: str,
-    file: str,
-    names: list[str],
-    arrow_types: dict,
-    verify_checksums: bool,
-) -> pa.Table:
-    """One chunk file -> decoded arrow table with exactly ``names``
-    columns (schema-evolution null fill, checksum verification) —
-    the executor-side read kernel shared by batch and streaming."""
-    import zlib
+def _read_partition(reader, partition: _ChunkPartition):
+    """Decoded batches of one chunk file in the reader's schema — the
+    executor side of the batch and the streaming scan."""
+    from ..operators.decode import arrow_columns, decode_chunk_file
 
-    import pyarrow.parquet as _pq
-
-    from ..functions.codecs import decode_array
-
-    fs, p = fsio.resolve(fsio.join(out_dir, "chunks", file))
-    t = _pq.read_table(p, filesystem=fs)
-    by_col = {}
-    cols = t.column("column").to_pylist()
-    metas = t.column("meta").to_pylist()
-    crcs = t.column("crc32").to_pylist()
-    payloads = t.column("payload")
-    for i, name in enumerate(cols):
-        if name not in names:
-            continue
-        payload = payloads[i].as_py()
-        if verify_checksums and f"{zlib.crc32(payload):08x}" != crcs[i]:
-            raise IOError(
-                f"checksum mismatch decoding column {name!r} of {file!r}"
-            )
-        by_col[name] = decode_array(json.loads(metas[i]), payload)
-    n_rows = len(next(iter(by_col.values()))) if by_col else 0
-    arrays = [
-        by_col[n] if n in by_col else pa.nulls(n_rows, type=arrow_types[n])
-        for n in names
-    ]
-    return pa.Table.from_arrays(arrays, names=names)
+    names, arrow_types = arrow_columns(reader.schema)
+    t = decode_chunk_file(
+        fsio.join(reader.path, "chunks", partition.file),
+        names, arrow_types, reader.verify,
+    )
+    yield from t.to_batches()
 
 
 class EncodedTableReader(DataSourceReader):
@@ -267,16 +240,7 @@ class EncodedTableReader(DataSourceReader):
     def read(self, partition: _ChunkPartition | None):
         if partition is None:  # Spark's placeholder for a pruned-empty scan
             return
-        from pyspark.sql.pandas.types import to_arrow_type
-
-        names = [f.name for f in self.schema.fields]
-        arrow_types = {
-            f.name: to_arrow_type(f.dataType) for f in self.schema.fields
-        }
-        t = _decode_chunk_file(
-            self.path, partition.file, names, arrow_types, self.verify
-        )
-        yield from t.to_batches()
+        yield from _read_partition(self, partition)
 
 
 class _ChunkCommit(WriterCommitMessage):
@@ -319,21 +283,16 @@ class EncodedTableWriter(DataSourceArrowWriter):
     def write(self, iterator):
         from pyspark import TaskContext
 
-        from ..operators.encode import encode_chunk_table
+        from ..operators.encode import write_chunk
 
         chunk_id = TaskContext.get().partitionId()
         batches = list(iterator)
         if not batches or not sum(b.num_rows for b in batches):
             return _ChunkCommit(chunk_id, 0)
         table = pa.Table.from_batches(batches)
-        enc, manifest = encode_chunk_table(table, chunk_id, self.key)
-        fname = f"chunk-{chunk_id:05d}.parquet"
-        manifest["file"] = fname
-        manifest["file_bytes"] = fsio.write_parquet_atomic(
-            enc, fsio.join(self.path, "chunks", fname)
-        )
-        fsio.write_json_atomic(
-            fsio.join(self.path, "manifest", f"{chunk_id:05d}.json"), manifest
+        write_chunk(
+            table, chunk_id, self.key,
+            fsio.join(self.path, "chunks"), fsio.join(self.path, "manifest"),
         )
         return _ChunkCommit(chunk_id, table.num_rows)
 
@@ -451,16 +410,7 @@ class EncodedTableStreamReader(DataSourceStreamReader):
     def read(self, partition: _ChunkPartition | None):
         if partition is None:
             return
-        from pyspark.sql.pandas.types import to_arrow_type
-
-        names = [f.name for f in self.schema.fields]
-        arrow_types = {
-            f.name: to_arrow_type(f.dataType) for f in self.schema.fields
-        }
-        t = _decode_chunk_file(
-            self.path, partition.file, names, arrow_types, self.verify
-        )
-        yield from t.to_batches()
+        yield from _read_partition(self, partition)
 
     def commit(self, end: dict) -> None:
         pass
